@@ -21,28 +21,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import expr_memo
+
 VOCAB_SIZE = 50257
 MAX_TOKENS = 4096
-
-
-# Column-expression memo: unresolved Columns are immutable and bind by
-# name at analysis, so the same tree is reusable across any number of
-# DataFrames. The engine re-derives this per microbatch epoch; building
-# it once removes the py4j construction round-trips from the per-epoch
-# driver-serial path (r6; guide §5 — the driver should do almost no work).
-_NTOK_CACHE: dict = {}
 
 
 def recompute_n_tok(df: DataFrame, tokens_col: str = "tokens",
                     n_tok_col: str = "n_tok") -> DataFrame:
     """n_tok = size(tokens), derived-if-missing-or-wrong (always recomputed
     for D-ops' null arrays n_tok stays null). Pure Catalyst — codegen'd."""
-    col = _NTOK_CACHE.get((tokens_col, n_tok_col))
-    if col is None:
-        col = _NTOK_CACHE[(tokens_col, n_tok_col)] = (
-            F.when(F.col(tokens_col).isNull(), F.lit(None).cast("int"))
-            .otherwise(F.size(F.col(tokens_col)).cast("int"))
-        )
+    col = expr_memo(("ntok", tokens_col), lambda: (
+        F.when(F.col(tokens_col).isNull(), F.lit(None).cast("int"))
+        .otherwise(F.size(F.col(tokens_col)).cast("int"))
+    ))
     return df.withColumn(n_tok_col, col)
 
 

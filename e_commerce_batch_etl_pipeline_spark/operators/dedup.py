@@ -1,5 +1,7 @@
 """Deduplication family for training-data pipelines (SURVEY.md build-plan
-extension): exact, MinHash+LSH, SimHash, n-gram Jaccard.
+extension): MinHash+LSH, SimHash, n-gram Jaccard. Exact dedup needs no
+operator: ``queries.py::dedup_exact_stats`` groups by
+``functions/text.py::doc_fingerprint``.
 
 All hashing is md5-derived (``conv(substr(md5(x),1,15),16,10)``) so results
 are portable bit-for-bit to any engine with md5 — the correctness oracles
@@ -8,7 +10,6 @@ expressions over exploded word/shingle sets: distributed, shuffle-on-key,
 no Python in the loop.
 
 Scale notes (100 TB corpus):
-- exact dedup = one hash-aggregate on the fingerprint (map-side partial).
 - MinHash: signature computation is embarrassingly parallel (per-row
   array_min over a transform — no shuffle); LSH banding turns the O(n²)
   pair problem into groupBy(band_hash) — pairs only materialize inside a
@@ -32,22 +33,6 @@ def md5int(col, salt: str | None = None):
 def words_expr(text_col):
     """Distinct whitespace tokens of a trimmed text column."""
     return F.array_distinct(F.split(F.trim(text_col), r"\s+"))
-
-
-def fingerprint(df: DataFrame, text_col: str = "text",
-                out: str = "fingerprint") -> DataFrame:
-    """Exact-dup fingerprint: md5 of normalized text (lower+trim)."""
-    return df.withColumn(out, F.md5(F.lower(F.trim(F.col(text_col)))))
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                key: str = "doc_id") -> DataFrame:
-    """Keep one row per distinct normalized text (min key wins)."""
-    fp = fingerprint(df, text_col)
-    w = fp.groupBy("fingerprint").agg(
-        F.min(key).alias(key), F.count(F.lit(1)).alias("dup_count")
-    )
-    return w
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",

@@ -33,14 +33,19 @@ Two physical strategies, same semantics (tested equivalent):
   this is the scale path (SURVEY.md §7.4). For max_by it is redundant —
   kept, tested, and exposed via the engine's ``salted`` flag.
 
-Both avoid windows-over-shuffle-sort: ``max_by(struct, lsn)`` aggregates
-without sorting every group.
+Neither uses a window over a shuffle-sort, but ``max_by(struct, lsn)``
+is not sort-free either: its buffer holds a variable-width struct, which
+HashAggregate cannot hold, so Spark plans every ``max_by`` as a
+SortAggregate (``plans/r06/engine_staging_after.txt`` shows two).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import expr_memo
+
 
 def _op_rank():
     # deterministic tiebreak if two envelopes carry the same lsn: deletes
@@ -54,16 +59,8 @@ def _payload_struct(df: DataFrame, key, order: str) -> list[str]:
     return [c for c in df.columns if c not in keys]
 
 
-# Column-expression memo keyed by (schema, keys, order): unresolved
-# Columns are immutable and bind by name at analysis, so the agg/select
-# trees are reusable across DataFrames with the same shape. The engine
-# rebuilds this DAG every microbatch epoch; the memo removes the py4j
-# construction round-trips from the per-epoch driver-serial path (r6).
-_EXPR_CACHE: dict = {}
-
-
 def lww_dedup(df: DataFrame, key="doc_id", order: str = "lsn") -> DataFrame:
-    """Keep, per key, the row with max (order, op_rank). Single hash agg.
+    """Keep, per key, the row with max (order, op_rank). One aggregate.
 
     ``key`` may be one column name or a list (composite group key). The
     engine's staging path groups by (table key, quarantine salt): because
@@ -74,19 +71,20 @@ def lww_dedup(df: DataFrame, key="doc_id", order: str = "lsn") -> DataFrame:
     shuffle for dedup + bucket-aligned staging together (guide §2.4).
     """
     keys = [key] if isinstance(key, str) else list(key)
-    ck = (tuple(df.columns), tuple(keys), order)
-    hit = _EXPR_CACHE.get(ck)
-    if hit is None:
+
+    def build():
         payload = _payload_struct(df, keys, order)
         ordk = F.struct(F.col(order), _op_rank().alias("_rank")) \
             if "op" in df.columns else F.struct(F.col(order))
-        if len(_EXPR_CACHE) > 128:
-            _EXPR_CACHE.clear()
-        hit = _EXPR_CACHE[ck] = (
+        return (
             F.max_by(F.struct(*payload), ordk).alias("_w"),
             [F.col(f"_w.{c}").alias(c) for c in payload],
         )
-    agg, out = hit
+
+    # memoized by shape (see session.expr_memo): the engine rebuilds
+    # this aggregate every epoch over the same columns
+    agg, out = expr_memo(
+        ("lww", tuple(df.columns), tuple(keys), order), build)
     winner = df.groupBy(*keys).agg(agg)
     return winner.select(*keys, *out)
 

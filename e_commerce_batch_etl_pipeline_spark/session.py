@@ -16,6 +16,32 @@ import threading
 
 from pyspark.sql import SparkSession
 
+# Column-expression memo shared by every per-epoch DAG builder (the LWW
+# aggregate, the n_tok recompute, the engine's staging expressions).
+# Unresolved Columns are immutable and bind by name at analysis, so one
+# tree serves any number of DataFrames; reusing it removes the py4j
+# construction round-trips from the per-epoch driver-serial path. Two
+# constraints: entries are py4j handles into the current JVM gateway, so
+# build_session clears the memo; and a memoized Alias keeps its exprId,
+# so two same-shape outputs joined or unioned in one plan share exprIds
+# and rely on the analyzer's DeduplicateRelations rewrite (pinned by
+# tests/test_lww.py). Bounded: cleared wholesale past _EXPR_MEMO_MAX.
+# No lock: every build of one key yields an equivalent tree, so a race
+# only builds an entry twice.
+_EXPR_MEMO: dict = {}
+_EXPR_MEMO_MAX = 256
+
+
+def expr_memo(key, build):
+    """``build()``'s result, built once per ``key`` (a hashable tuple
+    whose first element names the caller)."""
+    got = _EXPR_MEMO.get(key)
+    if got is None:
+        if len(_EXPR_MEMO) >= _EXPR_MEMO_MAX:
+            _EXPR_MEMO.clear()
+        got = _EXPR_MEMO[key] = build()
+    return got
+
 
 def _preheat(spark: SparkSession) -> None:
     """Warm the Python worker pool and the codegen/shuffle machinery with
@@ -133,6 +159,7 @@ def build_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _EXPR_MEMO.clear()
     spark.sparkContext.setLogLevel("WARN")
     if os.environ.get("SPARK_GRAFT_PREHEAT", "1") != "0":
         _preheat(spark)

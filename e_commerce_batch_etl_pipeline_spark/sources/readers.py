@@ -49,25 +49,6 @@ def read_csv(
     return reader.schema(schema).csv(path)
 
 
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    mode: str = "PERMISSIVE",
-    corrupt_col: str | None = None,
-) -> DataFrame:
-    if mode not in MODES:
-        raise ValueError(f"mode must be one of {MODES}")
-    if corrupt_col:
-        schema = T.StructType(
-            list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
-        )
-    reader = spark.read.option("mode", mode)
-    if corrupt_col:
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
-    return reader.schema(schema).json(path)
-
-
 def split_corrupt(
     df: DataFrame, corrupt_col: str = "_corrupt"
 ) -> tuple[DataFrame, DataFrame]:
@@ -82,26 +63,3 @@ def split_corrupt(
     clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
     bad = df.filter(F.col(corrupt_col).isNotNull())
     return clean, bad
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    properties: dict[str, str] | None = None,
-    num_partitions: int | None = None,
-):
-    """JDBC scan with query pushdown (reference S4,
-    ``notebooks/05_mysql_load.py:288-303``). No RDBMS/driver jar ships in
-    this environment — the call is a thin passthrough that surfaces a
-    clear error if no driver is present; kept so the reference's serving
-    path has a named, tested seam.
-    """
-    reader = spark.read.format("jdbc").option("url", url).option(
-        "dbtable", table
-    )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if num_partitions:
-        reader = reader.option("numPartitions", str(num_partitions))
-    return reader.load()

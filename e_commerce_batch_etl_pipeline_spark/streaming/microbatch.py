@@ -9,9 +9,11 @@ One epoch (microbatch) flows through (SURVEY.md §3.4):
 4. **validate** envelopes (Catalyst predicates); invalid → quarantine +
    conflict count (reference analog: PERMISSIVE-mode + business-rule
    filters, ``src/extract.py:40-48`` + ``src/transform.py:90-112``)
-5. **watermark filter** — rows with lsn ≤ the bucket's committed
-   watermark were applied by a previous run → dropped (exactly-once
-   under partial replay)
+5. **watermark filter** — valid rows with lsn ≤ their bucket's committed
+   watermark were applied by an earlier commit → dropped. This keeps a
+   partial replay, and applied rows redelivered under a NEW epoch id
+   (which no fence matches), exactly-once. The B watermarks are one
+   plan-time literal indexed by the bucket expression — no join
 6. **LWW dedup** per doc_id by max lsn (salted two-stage for hot keys)
 7. **recompute n_tok** (derive-if-missing, vectorized)
 8. **MERGE** into only the touched buckets (anti-join + union;
@@ -51,57 +53,37 @@ from pyspark.sql import functions as F
 from ..functions.tokens import recompute_n_tok
 from ..operators.lww import lww_dedup, lww_dedup_salted
 from ..operators.merge import merge_upsert, merge_upsert_lww
+from ..session import expr_memo
 from ..sources.wal import WalSource
-from ..tables.format import LakeTable, bucket_expr
+from ..tables.format import LakeTable, _build_entries, bucket_expr
 
 ENVELOPE_COLS = {"lsn", "epoch", "op", "ts"}
 
 
-def _footer_stats(stage_dir: str, order_col: str = "lsn") -> dict[int, dict]:
-    """Per-bucket stats from bucket-pure staged parquet footers.
+def _watermark_filter(df, snap):
+    """Drop VALID rows at-or-below their bucket's committed watermark;
+    audit-lane rows (``_q == 1``) always pass — they are never applied.
 
-    Driver-side, O(files) metadata reads — the SMALL-bucket-count fast
-    path (local footer opens beat a Spark job below a few hundred
-    files). File part-0000i ↔ bucket i (HashPartitioning alignment);
-    rows from the footer, max lsn from the column's row-group
-    statistics. Footer opens run on a thread pool (I/O-bound; GIL
-    released inside pyarrow). Above ``stats_max_footer_files`` the
-    engine switches to the distributed stats job in ``_bucket_stats``
-    (O(1) driver file opens — the 10^4-10^5-bucket path).
+    The B watermarks ride the plan as ONE JSON string literal that
+    from_json parses and Catalyst folds into a single array Literal,
+    indexed by the bucket expression: no per-epoch broadcast build, and
+    plan time flat in B (``lit(list)`` would lower to B Literal nodes —
+    ~1 s of analysis per epoch at B=4096). ``Snapshot.watermark`` is
+    keyed by ``str(bucket)``; buckets without one get the LONG_MIN
+    sentinel (lsn > LONG_MIN always).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    def one(fn: str):
-        bucket = int(fn.split("-")[1])
-        md = pq.ParquetFile(os.path.join(stage_dir, fn)).metadata
-        if md.num_rows == 0:
-            return None
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        col = idx[order_col]
-        max_lsn = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col).statistics
-            if st is None or not st.has_min_max:
-                raise RuntimeError(
-                    f"staged file {fn} lacks {order_col} statistics"
-                )
-            v = int(st.max)
-            max_lsn = v if max_lsn is None else max(max_lsn, v)
-        return bucket, {"rows": md.num_rows, "max_lsn": int(max_lsn)}
-
-    names = sorted(
-        fn for fn in os.listdir(stage_dir) if fn.endswith(".parquet")
+    wm = snap.watermark
+    if not wm:
+        return df
+    B = snap.num_buckets
+    no_wm = -(1 << 63)
+    wm_json = json.dumps([int(wm.get(str(b), no_wm)) for b in range(B)])
+    wm_col = F.element_at(
+        F.from_json(F.lit(wm_json), "array<bigint>"),
+        expr_memo(("engine.wm_idx", snap.key_column, B),
+                  lambda: bucket_expr(snap.key_column, B) + 1),
     )
-    out: dict[int, dict] = {}
-    if not names:
-        return out
-    with ThreadPoolExecutor(max_workers=min(16, len(names))) as ex:
-        for res in ex.map(one, names):
-            if res is not None:
-                out[res[0]] = res[1]
-    return out
+    return df.filter((F.col("_q") == 1) | (F.col("lsn") > wm_col))
 
 
 @dataclass
@@ -176,21 +158,9 @@ class CdcEngine:
         self.stats_max_footer_files = stats_max_footer_files
         self.commit_retries = commit_retries
         self.delta_blooms = delta_blooms
-        # Column-expression memo: the staging DAG is rebuilt every epoch,
-        # but its expression trees are epoch-invariant (unresolved Columns
-        # bind by name at analysis and are immutable). Reusing them cuts
-        # the per-epoch py4j construction round-trips — measured as the
-        # largest driver-serial component of an epoch (r6; guide §5).
-        self._excache: dict = {}
         os.makedirs(checkpoint_dir, exist_ok=True)
         os.makedirs(os.path.join(checkpoint_dir, "lineage"), exist_ok=True)
         os.makedirs(os.path.join(checkpoint_dir, "quarantine"), exist_ok=True)
-
-    def _cached_col(self, key, build):
-        got = self._excache.get(key)
-        if got is None:
-            got = self._excache[key] = build()
-        return got
 
     # ---------- checkpoint ----------
 
@@ -214,47 +184,51 @@ class CdcEngine:
 
     # ---------- per-bucket stats ----------
 
-    def _bucket_stats(self, valid_dir: str, snap) -> dict[int, dict]:
-        """Per-bucket (rows, max_lsn) for the staged change-set.
+    def _staged_stats(self, valid_dir: str, snap):
+        """``({bucket: {rows, max_lsn}}, entries)`` for the staged
+        change-set.
 
-        Two paths, switched on file count so driver work never scales
-        with the bucket count:
-
-        - ``<= stats_max_footer_files`` staged files: driver-side parquet
-          footer reads (thread-pooled; ~1 ms/file, faster than a job at
-          small B).
-        - above it: a DISTRIBUTED stats job — column-pruned scan of
-          (key, lsn) over the bucket-pure staged files, groupBy the
-          bucket expression, collect B small rows. O(1) driver file
-          opens; the job parallelizes with the cluster, so per-epoch
-          driver time stays flat at 10^4-10^5 buckets (the 10^10 shape).
-          Measured crossover + flatness: see BASELINE.md 'per-bucket
-          stats collection'.
+        The staged files are bucket-pure (part-0000i holds bucket i), so
+        their parquet footers carry both: ``_build_entries`` reads them
+        on the shared I/O pool, and MOR adopts those same entries. CoW
+        above ``stats_max_footer_files`` staged files runs a DISTRIBUTED
+        stats job instead — a column-pruned scan of (key, lsn) grouped
+        by the bucket expression, B small rows collected — so driver
+        file opens never scale with the bucket count (10^4-10^5
+        buckets; crossover and flatness measured in BASELINE.md
+        'per-bucket stats collection'). That path returns no entries.
         """
         if not os.path.isdir(valid_dir):
-            return {}
+            return {}, []
         n_files = sum(
             1 for fn in os.listdir(valid_dir) if fn.endswith(".parquet")
         )
-        if n_files == 0:
-            return {}
-        if n_files <= self.stats_max_footer_files:
-            return _footer_stats(valid_dir, order_col="lsn")
-        df = self.spark.read.parquet(valid_dir)
-        rows = (
-            df.groupBy(
-                bucket_expr(snap.key_column, snap.num_buckets).alias("_b")
+        if self.merge_mode == "cow" and n_files > self.stats_max_footer_files:
+            rows = (
+                self.spark.read.parquet(valid_dir)
+                .groupBy(
+                    bucket_expr(snap.key_column, snap.num_buckets).alias("_b")
+                )
+                .agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.max("lsn").alias("max_lsn"),
+                )
+                .collect()
             )
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.max("lsn").alias("max_lsn"),
-            )
-            .collect()
-        )
-        return {
-            int(r["_b"]): {"rows": int(r["rows"]), "max_lsn": int(r["max_lsn"])}
-            for r in rows
-        }
+            return {
+                int(r["_b"]): {"rows": int(r["rows"]),
+                               "max_lsn": int(r["max_lsn"])}
+                for r in rows
+            }, None
+        entries = _build_entries(valid_dir, "", snap.key_column, None)
+        stats = {}
+        for e in entries:
+            if "max_lsn" not in e:
+                raise RuntimeError(
+                    f"staged file {e['path']} lacks lsn statistics"
+                )
+            stats[e["bucket"]] = {"rows": e["rows"], "max_lsn": e["max_lsn"]}
+        return stats, entries
 
     # ---------- the loop ----------
 
@@ -413,11 +387,6 @@ class CdcEngine:
 
     def _apply_changes_once(self, raw, epoch: int) -> EpochResult:
         t0 = time.time()
-        import sys as _sys
-        _ph = (lambda tag: print(
-            f"PHASE e{epoch} {tag} {time.time() - t0:.3f}",
-            file=_sys.stderr, flush=True)) if os.environ.get(
-            "SPARK_GRAFT_PHASE_LOG") == "1" else (lambda tag: None)
         snap = self.table.current()
 
         # 1. fence check — full-epoch replay is a no-op (epochs below the
@@ -429,7 +398,6 @@ class CdcEngine:
                                duration_sec=time.time() - t0)
         if raw is None:
             raw = self.wal.read_epoch(self.spark, epoch)
-        _ph("wal_read")
 
         # 3. schema evolution from the envelope shape — metadata-only DDL:
         #    new nullable payload columns are ADDED; a payload column
@@ -467,13 +435,14 @@ class CdcEngine:
         from ..functions.tokens import envelope_validity
 
         flagged = raw.withColumn(
-            "_q", self._cached_col(
-                "validity", lambda: (~envelope_validity()).cast("int"))
+            "_q", expr_memo(
+                ("engine.validity",),
+                lambda: (~envelope_validity()).cast("int"))
         )
         obs_in = Observation()
         flagged = flagged.observe(
             obs_in,
-            *self._cached_col("obs_in", lambda: (
+            *expr_memo(("engine.obs_in",), lambda: (
                 F.count(F.lit(1)).alias("rows_in"),
                 F.sum("_q").alias("rows_q"),
             )),
@@ -484,53 +453,10 @@ class CdcEngine:
             # counts see every row)
             flagged = flagged.filter(F.col("_q") == 0)
 
-        # 5. watermark filter (exactly-once under partial replay):
-        # bucket the key, then drop VALID rows at-or-below the bucket
-        # watermark; audit-lane rows always pass (they are never applied).
-        # Small B: a PLAN-TIME literal array indexed by the bucket
-        # expression — no BroadcastExchange build job per epoch for a
-        # B-row relation (guide §2.4: remove shuffles/broadcasts outright
-        # when the small side is driver-resident metadata). Large B: the
-        # broadcast join — PySpark's lit(list) lowers to CreateArray of B
-        # Literal nodes, and above ~1k buckets the analyzer/optimizer
-        # walking that tree costs MORE plan time per epoch than the
-        # broadcast build it replaces (measured at B=4096: literal path
-        # 1.3-2.0 s vs join 0.3-1.4 s per epoch).
+        # 5. watermark filter (exactly-once under partial replay and
+        # under redelivery with a new epoch id)
+        flagged = _watermark_filter(flagged, snap)
         B = snap.num_buckets
-        wm = snap.watermark
-        if wm and B <= 1024:
-            # buckets with no watermark keep every row: LONG_MIN sentinel
-            # (lsn > LONG_MIN always) keeps the literal array homogeneous
-            no_wm = -(1 << 63)
-            wm_arr = [int(wm.get(b, no_wm)) for b in range(B)]
-            wm_col = F.element_at(
-                F.lit(wm_arr).cast("array<long>"),
-                self._cached_col(
-                    ("wm_idx", snap.key_column, B),
-                    lambda: bucket_expr(snap.key_column, B) + 1),
-            )
-            flagged = flagged.filter(
-                (F.col("_q") == 1) | (F.col("lsn") > wm_col)
-            )
-        elif wm:
-            wm_df = self.spark.createDataFrame(
-                [(int(b), int(l)) for b, l in wm.items()], "_b int, _wm long"
-            )
-            flagged = flagged.withColumn(
-                "_wmb", bucket_expr(snap.key_column, B)
-            )
-            flagged = (
-                flagged.join(
-                    F.broadcast(wm_df), flagged["_wmb"] == wm_df["_b"],
-                    "left",
-                )
-                .filter(
-                    (F.col("_q") == 1)
-                    | F.col("_wm").isNull()
-                    | (F.col("lsn") > F.col("_wm"))
-                )
-                .drop("_b", "_wm", "_wmb")
-            )
 
         # 6. LWW dedup — deterministic winner per key by max lsn. The
         # audit lane rides the same aggregate: its salt column
@@ -560,8 +486,8 @@ class CdcEngine:
                 work, key="_gk", num_salts=self.num_salts
             )
         else:
-            qsalt = self._cached_col(
-                ("qsalt", tuple(raw.columns)),
+            qsalt = expr_memo(
+                ("engine.qsalt", tuple(raw.columns)),
                 lambda: F.when(
                     F.col("_q") == 1,
                     F.concat_ws(
@@ -584,7 +510,7 @@ class CdcEngine:
         # 7. vectorized n_tok recompute (derive-if-missing/wrong) — valid
         # lane only; audit rows keep their received n_tok verbatim
         if "n_tok" in dedup.columns:
-            recv_col, keep_col = self._cached_col("ntok_fold", lambda: (
+            recv_col, keep_col = expr_memo(("engine.ntok_fold",), lambda: (
                 F.col("n_tok").cast("int"),
                 F.when(F.col("_q") == 1, F.col("_n_tok_recv"))
                 .otherwise(F.col("n_tok")),
@@ -605,7 +531,7 @@ class CdcEngine:
         # BUCKET-PURE (partition index == bucket_expr — murmur3-aligned),
         # which yields per-bucket stats (rows, max lsn) nearly for free:
         # parquet footer reads at small bucket counts, a column-pruned
-        # distributed job above stats_max_footer_files (_bucket_stats).
+        # distributed job above stats_max_footer_files (_staged_stats).
         # On a real cluster the staging write doubles as a deterministic
         # restart point.
         stage_dir = os.path.join(
@@ -617,12 +543,10 @@ class CdcEngine:
         # KEEPING the partition-index == bucket file naming inside each
         # (file part-0000i in _q=0 holds exactly bucket i's rows — the
         # task id is the shuffle partition index; asserted by tests)
-        _ph("dag_built")
         with bucket_aligned_write(self.spark):
             dedup.repartition(B, F.col(snap.key_column)).write.mode(
                 "overwrite"
             ).partitionBy("_q").parquet(stage_dir)
-        _ph("staged")
         conflicts = int(obs_in.get["rows_q"] or 0)
         if self.audit_quarantine:
             qsrc = os.path.join(stage_dir, "_q=1")
@@ -636,33 +560,9 @@ class CdcEngine:
                 os.makedirs(qdir, exist_ok=True)  # nothing quarantined
         valid_dir = os.path.join(stage_dir, "_q=0")
         try:
-            # touched buckets + per-bucket max lsn + applied rows — from
-            # parquet footers (small epochs) or a distributed stats job
-            # (large bucket counts); see _bucket_stats. Merge-on-read
-            # derives BOTH the stats and the manifest entries that
-            # adopt_delta_files will publish from ONE threaded footer
-            # pass — adoption needs the per-file entries (rows, min/max
-            # key, min/max lsn) regardless, so a separate stats pass
-            # would open every staged footer a second time.
-            staged_entries = None
-            if self.merge_mode == "mor":
-                from ..tables.format import _build_entries
-
-                staged_entries = _build_entries(
-                    valid_dir, "", snap.key_column, None
-                ) if os.path.isdir(valid_dir) else []
-                stats = {}
-                for e in staged_entries:
-                    if "max_lsn" not in e:
-                        raise RuntimeError(
-                            f"staged file {e['path']} lacks lsn statistics"
-                        )
-                    stats[e["bucket"]] = {
-                        "rows": e["rows"], "max_lsn": e["max_lsn"],
-                    }
-            else:
-                stats = self._bucket_stats(valid_dir, snap)
-            _ph("entries_built")
+            # touched buckets + per-bucket max lsn + applied rows, and
+            # (footer path) the entries MOR adoption publishes
+            stats, staged_entries = self._staged_stats(valid_dir, snap)
             if not stats:
                 return EpochResult(
                     epoch=epoch, status="empty", conflicts=conflicts,
@@ -719,7 +619,6 @@ class CdcEngine:
                     valid_dir, touched, key_column=snap.key_column,
                     entries=staged_entries,
                 )
-                _ph("adopted")
                 landed = self.table.commit(
                     epoch=epoch,
                     replaced_buckets=touched,
@@ -729,7 +628,6 @@ class CdcEngine:
                     props={"epoch": epoch, "mode": "mor"},
                     delta=True,
                 )
-                _ph("committed")
                 if landed is None:
                     # fence no-op: a concurrent engine committed this
                     # epoch between our fence check and our commit. The

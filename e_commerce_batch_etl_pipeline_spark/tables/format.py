@@ -72,15 +72,18 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer published a snapshot since this commit was planned."""
 # Shared driver-side I/O pool (footer reads, manifest write+fsync): the
 # per-epoch phases used to build and tear down a 16-thread pool EACH —
-# thread spawn/join is pure per-epoch driver-serial overhead (r6;
-# guide §5). Lazy singleton; tasks never submit back into the pool, so
-# it cannot self-deadlock.
+# thread spawn/join is pure per-epoch driver-serial overhead.
+# Lazy singleton. A task that maps back into the pool can deadlock it
+# once every worker waits on a queued child, so _io_pool() refuses
+# callers running on a pool thread.
 _IO_POOL = None
 _IO_POOL_LOCK = threading.Lock()
 
 
 def _io_pool():
     global _IO_POOL
+    if threading.current_thread().name.startswith("lake-io"):
+        raise RuntimeError("_io_pool() called from a lake-io pool task")
     if _IO_POOL is None:
         with _IO_POOL_LOCK:
             if _IO_POOL is None:
@@ -374,9 +377,9 @@ def _build_entries(
     """File entries (with footer stats) for every non-empty bucket-pure
     ``part-0000i-*`` file in ``src_dir``. Footer opens run on a thread
     pool (I/O-bound, GIL released inside pyarrow) so a 4096-bucket
-    commit's entry build is not 4096 SERIAL driver reads — the same
-    treatment the engine's staged-stats fast path uses
-    (streaming/microbatch.py::_footer_stats)."""
+    commit's entry build is not 4096 SERIAL driver reads. The engine's
+    staged-stats footer path reads its per-bucket rows and max lsn from
+    these entries too (streaming/microbatch.py::CdcEngine._staged_stats)."""
     cands = []
     for fn in sorted(os.listdir(src_dir)):
         if not fn.endswith(".parquet"):

@@ -61,11 +61,9 @@ def test_golden_final_state(spark, tmpdir_clean):
 
 
 def test_golden_final_state_large_bucket_count(spark, tmpdir_clean):
-    """Same golden-state contract through the LARGE-B watermark branch:
-    above 1024 buckets the engine switches from the plan-time literal
-    watermark array (whose ~B Literal nodes cost more analyzer time than
-    a broadcast build past ~1k) back to the broadcast join — both
-    branches must replay to the identical state (r6)."""
+    """Same golden-state contract at 1040 buckets: the single from_json
+    watermark literal (1040 elements, no join) must replay to the
+    identical state at a bucket count this large too."""
     base = generate_base_docs(spark, 200, seed=42, max_len=16)
     table = bootstrap_table(
         os.path.join(tmpdir_clean, "table"), base, num_buckets=1040
@@ -81,6 +79,26 @@ def test_golden_final_state_large_bucket_count(spark, tmpdir_clean):
     expected = _oracle_state(base, wal, spark, payload)
     actual = _collect_state(table.read(spark), payload)
     assert_states_equal(expected, actual)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_redelivery_under_new_epoch_id_applies_nothing(
+        spark, tmpdir_clean, mode):
+    """Already-applied rows redelivered under a NEW epoch id — what the
+    foreachBatch front-end does after losing its streaming checkpoint —
+    match no fence, so the per-bucket watermark alone must drop every
+    one of them (here at 4 buckets)."""
+    table, wal, base = _setup(spark, tmpdir_clean)
+    eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "ckpt"),
+                    merge_mode=mode)
+    eng.run()
+    v = table.current().version
+    payload = ["tokens", "n_tok", "source"]
+    before = _collect_state(table.read(spark), payload)
+    res = eng.apply_changes_df(wal.read_epoch(spark, 0), epoch=EPOCHS + 10)
+    assert res.status == "empty" and res.rows_applied == 0
+    assert table.current().version == v
+    assert_states_equal(before, _collect_state(table.read(spark), payload))
 
 
 def test_replay_idempotent(spark, tmpdir_clean):

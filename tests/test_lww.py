@@ -84,13 +84,13 @@ def test_tiebreak_delete_loses(spark):
     assert w2["x"][1] == "U"
 
 
-def test_expr_memo_reuse_is_result_invariant(spark):
-    """The r6 expression memo (operators/lww.py::_EXPR_CACHE) must hand
-    back trees that bind freshly per DataFrame: two different inputs
-    with the SAME schema (a cache hit) dedup independently and
-    identically to a cold cache."""
-    from e_commerce_batch_etl_pipeline_spark.operators import lww
+def _lww_memo_entries():
+    from e_commerce_batch_etl_pipeline_spark import session
 
+    return [k for k in session._EXPR_MEMO if k[0] == "lww"]
+
+
+def _same_schema_pair(spark):
     a = spark.createDataFrame(
         [(1, 0, "U", "x", [1], 1, "web"), (2, 0, "U", "x", [2], 1, "web")],
         SCHEMA,
@@ -99,12 +99,76 @@ def test_expr_memo_reuse_is_result_invariant(spark):
         [(9, 0, "U", "x", [9], 1, "wiki"), (3, 0, "D", "y", None, None, None)],
         SCHEMA,
     )
-    lww._EXPR_CACHE.clear()
+    return a, b
+
+
+def test_expr_memo_reuse_is_result_invariant(spark):
+    """The shared expression memo (session.expr_memo) must hand back
+    trees that bind freshly per DataFrame: two different inputs with the
+    SAME schema (a memo hit) dedup independently and identically to a
+    cold memo."""
+    from e_commerce_batch_etl_pipeline_spark import session
+
+    a, b = _same_schema_pair(spark)
+    session._EXPR_MEMO.clear()
     cold_a = _winners(lww_dedup(a))
-    assert len(lww._EXPR_CACHE) == 1  # memo populated
-    hit_b = _winners(lww_dedup(b))   # same schema: cache hit, new input
-    assert len(lww._EXPR_CACHE) == 1
-    lww._EXPR_CACHE.clear()
+    assert len(_lww_memo_entries()) == 1  # memo populated
+    hit_b = _winners(lww_dedup(b))   # same schema: memo hit, new input
+    assert len(_lww_memo_entries()) == 1
+    session._EXPR_MEMO.clear()
     assert _winners(lww_dedup(a)) == cold_a
     assert _winners(lww_dedup(b)) == hit_b
     assert cold_a["x"][0] == 2 and hit_b["x"][0] == 9
+
+
+def test_expr_memo_shared_exprids_in_one_plan(spark):
+    """Two same-schema lww_dedup outputs built from ONE memo entry carry
+    the same Alias exprIds; joined or unioned in one plan they must give
+    the results of independently built (cold) outputs."""
+    from e_commerce_batch_etl_pipeline_spark import session
+
+    a, b = _same_schema_pair(spark)
+
+    def combine(da, db):
+        j = da.alias("l").join(db.alias("r"), "doc_id").select(
+            "doc_id", F.col("l.lsn").alias("l_lsn"),
+            F.col("r.lsn").alias("r_lsn"), F.col("r.op").alias("r_op"))
+        return (sorted(map(tuple, da.unionByName(db).collect()), key=str),
+                sorted(map(tuple, j.collect())))
+
+    session._EXPR_MEMO.clear()
+    da = lww_dedup(a)
+    session._EXPR_MEMO.clear()
+    cold = combine(da, lww_dedup(b))
+    session._EXPR_MEMO.clear()
+    da, db = lww_dedup(a), lww_dedup(b)
+    assert len(_lww_memo_entries()) == 1  # both served from one entry
+    assert combine(da, db) == cold
+    assert cold[1] == [("x", 2, 9, "U")]
+
+
+def test_build_session_clears_expr_memo(spark, monkeypatch):
+    """Memo entries are py4j handles into the current JVM gateway, so
+    build_session drops them; rebuilt trees give the warm results."""
+    from e_commerce_batch_etl_pipeline_spark import session
+    from e_commerce_batch_etl_pipeline_spark.functions.tokens import (
+        recompute_n_tok,
+    )
+
+    a, _ = _same_schema_pair(spark)
+
+    def results():
+        return (_winners(lww_dedup(a)),
+                sorted(map(tuple, recompute_n_tok(a).collect()), key=str))
+
+    warm = results()
+    assert _lww_memo_entries()
+    monkeypatch.setenv("SPARK_GRAFT_PREHEAT", "0")
+    # the same arguments as the suite's session fixture: getOrCreate
+    # hands back that session with its settings unchanged
+    assert session.build_session(
+        app_name="tests", master="local[4]", shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": "6g"},
+    ) is spark
+    assert session._EXPR_MEMO == {}
+    assert results() == warm

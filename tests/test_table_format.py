@@ -504,3 +504,12 @@ def test_meta_files_tolerates_statless_entries(spark, table):
     rows = {r["path"]: r for r in table.meta(spark, "files", snapshot=snap).collect()}
     assert rows[e["path"]]["rows"] is None
     assert rows[e["path"]]["min_key"] is None
+
+
+def test_io_pool_refuses_reentry():
+    """A pool task mapping back into the shared I/O pool could deadlock
+    it, so _io_pool() refuses callers on a lake-io thread."""
+    from e_commerce_batch_etl_pipeline_spark.tables import format as fmt
+
+    with pytest.raises(RuntimeError, match="lake-io"):
+        fmt._io_pool().submit(fmt._io_pool).result()

@@ -42,13 +42,16 @@ def envelope_validity(vocab_size: int = VOCAB_SIZE):
     """Boolean Column: is this WAL envelope structurally valid?
 
     Invalid (quarantined, counted as conflicts, never applied):
-      - null doc_id, or op not in {I,U,D}
+      - null doc_id, null lsn, or op null or not in {I,U,D}
       - I/U with null/empty tokens, or token out of [0, vocab)
       - D rows are valid regardless of payload (payload ignored)
-    All checks are Catalyst expressions (F.forall runs JVM-side).
+    Never NULL: ``isin`` on a NULL op is NULL, and a NULL flag would be
+    neither applied-and-counted nor quarantined — so the whole predicate
+    coalesces to False. All checks are Catalyst expressions (F.forall
+    runs JVM-side).
     """
     op_ok = F.col("op").isin("I", "U", "D")
-    key_ok = F.col("doc_id").isNotNull()
+    key_ok = F.col("doc_id").isNotNull() & F.col("lsn").isNotNull()
     toks = F.col("tokens")
     tokens_ok = (
         toks.isNotNull()
@@ -56,7 +59,9 @@ def envelope_validity(vocab_size: int = VOCAB_SIZE):
         & (F.size(toks) <= MAX_TOKENS)
         & F.forall(toks, lambda x: x.isNotNull() & (x >= 0) & (x < F.lit(vocab_size)))
     )
-    return key_ok & op_ok & ((F.col("op") == "D") | tokens_ok)
+    return F.coalesce(
+        key_ok & op_ok & ((F.col("op") == "D") | tokens_ok), F.lit(False)
+    )
 
 
 def validate_envelopes(

@@ -1,4 +1,4 @@
-"""MERGE-style upsert: apply a deduped change-set to base-table rows.
+"""MERGE-style upsert: apply a change-set to base-table rows.
 
 Semantics (Delta/Iceberg ``MERGE INTO`` with LWW source):
 
@@ -6,19 +6,23 @@ Semantics (Delta/Iceberg ``MERGE INTO`` with LWW source):
   update-as-upsert policy means I vs U converge — SURVEY.md §5.1)
 - op = D     → delete (no-op if the key is absent)
 
-Physical strategy: **anti-join + union**, not full_outer + CASE. The
-change-set after LWW dedup is small relative to the base table (per-epoch
-changes ≪ table size at 10^10 scale), so:
+Two physical strategies, same result (property-tested equal):
 
-    new_state = base ⟕anti changes (keys NOT updated/deleted)
-              ∪ changes.filter(op != 'D').project(payload)
+- ``merge_upsert`` — **anti-join + union** over a DEDUPED change-set:
 
-The anti join broadcasts the deduped change-keys when they fit under the
-broadcast threshold — the base table then streams through a
-BroadcastHashJoin with **zero shuffle of the base side**, which at 100 TB
-is the only viable plan. When the change-set is too big to broadcast, AQE
-falls back to a shuffled join; both sides are already hash-bucketed by
-key (the table layout), so the shuffle is aligned.
+      new_state = base ⟕anti changes (keys NOT updated/deleted)
+                ∪ changes.filter(op != 'D').project(payload)
+
+  The anti join can broadcast the change-keys, so the base streams
+  through a BroadcastHashJoin with no shuffle of its own. The
+  ``cdc_merge_upsert`` query runs it, and it is the equivalence oracle
+  for the engine's plan. The engine no longer runs it: the broadcast
+  build is serial driver work, and the bucket-pure write shuffles the
+  base anyway.
+- ``merge_upsert_lww`` — **union + one LWW aggregate** over RAW
+  envelopes: resolves change against change and change against base in
+  the same ``max_by``, off one key exchange that the bucket-pure write
+  reuses. The engine's copy-on-write MERGE.
 
 Reference analog: the reference has no MERGE (full overwrite each run,
 ``src/config.py:52``); its broadcast-join enrich (``src/pipeline.py:61-99``)
@@ -74,26 +78,28 @@ def merge_upsert_lww(
     key: str = "doc_id",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """MERGE as one union + LWW aggregate — the BULK-epoch physical plan.
+    """MERGE as one union + LWW aggregate — the engine's CoW plan.
 
-    Semantically identical to ``merge_upsert`` (same I/U/D-with-LWW-source
-    contract, same schema-union alignment), but shaped for the regime
-    where the change-set is too large to broadcast: instead of a shuffled
-    anti join (exchange base + exchange change-keys) FOLLOWED by the
-    bucket-aligned write exchange — i.e. the base shuffled twice and the
-    changes twice — union base and changes and resolve per key with one
-    ``max_by`` aggregate. Base rows carry source-rank 0, change rows
-    rank 1, so a change always wins its key; deletes are dropped after
-    the aggregate. Grouped by the key, the aggregate's required
-    clustering is satisfied by an upstream ``repartition(B, key)``, so
-    the whole merge + bucket-pure write runs off a SINGLE exchange of
-    base+changes (guide §2.4 "remove shuffles outright"; the caller does
-    the repartition so the write's own repartition is elided).
+    Same I/U/D contract and schema-union alignment as ``merge_upsert``,
+    but ``changes`` need NOT be deduped: it may hold any number of
+    envelopes per key (each with ``op`` and ``lsn``). Base and changes
+    are unioned and resolved per key by one ``max_by`` ordered on
+    ``(_src, lsn, op_rank)``: base rows carry source-rank 0 and change
+    rows rank 1, so any change beats the base; among changes the highest
+    lsn wins, and at equal lsn a delete loses to an upsert (the
+    ``lww_dedup`` tiebreak). Deletes are dropped after the aggregate. So
+    LWW dedup of the change-set and the MERGE are one operator
+    (equivalence with ``merge_upsert(base, lww_dedup(changes))`` is
+    property-tested in tests/test_properties.py).
 
-    Not the plan for SMALL change-sets: there the broadcast anti join
-    (``merge_upsert``) streams the base through a hash probe with no
-    per-row aggregate state; the engine switches on its broadcast
-    threshold.
+    Grouped by the key, the aggregate's required clustering is satisfied
+    by the ``repartition(num_partitions, key)`` below; at the table's
+    bucket count that also elides the bucket-pure writer's repartition,
+    so the merge and the write run off a SINGLE exchange of
+    base+changes — no shuffled anti join exchanging base and change-keys
+    before the write's own exchange, and no driver-side broadcast build
+    (guide §2.4 "remove shuffles outright"). The aggregate plans as a
+    SortAggregate (variable-width ``max_by`` buffer, see operators/lww.py).
     """
     ch_payload = changes.drop("op", "lsn", "epoch", "ts").columns
     out_cols = list(base.columns) + [c for c in ch_payload if c not in base.columns]
@@ -104,14 +110,17 @@ def merge_upsert_lww(
     for c in out_cols:
         if c not in base.columns:
             base_aligned = base_aligned.withColumn(c, F.lit(None).cast(ch_types[c]))
-    base_side = base_aligned.select(*out_cols).withColumn(
-        "_src", F.lit(0)
-    ).withColumn("op", F.lit("U"))
+    base_side = base_aligned.select(
+        *out_cols,
+        F.lit("U").alias("op"),
+        F.lit(None).cast(ch_types["lsn"]).alias("lsn"),
+        F.lit(0).alias("_src"),
+    )
     ch_side = changes
     for c in out_cols:
         if c not in ch_payload:
             ch_side = ch_side.withColumn(c, F.lit(None).cast(base_types[c]))
-    ch_side = ch_side.select(*out_cols, "op").withColumn("_src", F.lit(1))
+    ch_side = ch_side.select(*out_cols, "op", "lsn", F.lit(1).alias("_src"))
     unioned = base_side.unionByName(ch_side)
     if num_partitions is not None:
         # hash-partition by the key at the TABLE's bucket count so the
@@ -120,8 +129,12 @@ def merge_upsert_lww(
         # exchange of base+changes
         unioned = unioned.repartition(num_partitions, F.col(key))
     payload = [c for c in out_cols if c != key] + ["op"]
+    order = F.struct(
+        F.col("_src"), F.col("lsn"),
+        F.when(F.col("op") == "D", F.lit(0)).otherwise(F.lit(1)),
+    )
     winner = unioned.groupBy(key).agg(
-        F.max_by(F.struct(*payload), F.struct(F.col("_src"))).alias("_w")
+        F.max_by(F.struct(*payload), order).alias("_w")
     )
     return (
         winner.filter(F.col("_w.op") != "D")

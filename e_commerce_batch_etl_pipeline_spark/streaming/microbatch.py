@@ -14,18 +14,31 @@ One epoch (microbatch) flows through (SURVEY.md §3.4):
    partial replay, and applied rows redelivered under a NEW epoch id
    (which no fence matches), exactly-once. The B watermarks are one
    plan-time literal indexed by the bucket expression — no join
-6. **LWW dedup** per doc_id by max lsn (salted two-stage for hot keys)
-7. **recompute n_tok** (derive-if-missing, vectorized)
-8. **MERGE** into only the touched buckets (anti-join + union;
-   broadcast change-keys; untouched buckets' files survive untouched)
-9. **DQ gate** via ``df.observe`` during the staging write — metrics come
-   from the same job that stages files, zero extra passes; FAIL → abort
-   *before* publish (reference: orchestrator DQ gate,
-   ``notebooks/07_pipeline_orchestrator.py:250-252``)
-10. **atomic snapshot commit** + per-partition lineage + metrics JSON +
-    driver checkpoint
 
-Crash safety: a crash before publish leaves orphan staged files that no
+Copy-on-write (default) then runs, with nothing staged:
+
+6. **pre-pass** — one column-pruned aggregate grouped by bucket: distinct
+   applied keys and max lsn per bucket (touched buckets, lineage,
+   watermarks) and the quarantined count
+7. **audit lane** — quarantined envelopes written verbatim to
+   ``<ckpt>/quarantine/epoch-N`` (only when there are any)
+8. **MERGE** into only the touched buckets — ``merge_upsert_lww`` over
+   the base and the UN-deduped valid envelopes (n_tok recomputed, the
+   ``salted`` flag pre-collapses hot keys): LWW among changes and
+   against the base in one aggregate, off ONE key exchange of
+   base+changes that the bucket-pure write reuses; untouched buckets'
+   files survive untouched
+9. **DQ gate** via ``df.observe`` on that same write job — zero extra
+   passes; FAIL → abort *before* publish (reference: orchestrator DQ
+   gate, ``notebooks/07_pipeline_orchestrator.py:250-252``)
+10. **atomic snapshot commit** (CAS on the merged snapshot) +
+    per-partition lineage + metrics JSON + driver checkpoint
+
+Merge-on-read instead runs LWW dedup + n_tok recompute into ONE
+bucket-pure staging write (a ``df.observe`` on it counts conflicts), and
+adopts the staged files as the epoch's delta files — no table rewrite.
+
+Crash safety: a crash before publish leaves orphan written files that no
 manifest references (invisible); a crash after publish but before the
 driver checkpoint is healed by the (epoch, bucket) fence set — the rerun
 commits nothing twice. Resume = read checkpoint, continue from the next
@@ -34,8 +47,10 @@ epoch (``resume`` arg / CLI).
 Why a driver epoch loop and not Structured Streaming: exactly-once here
 is fenced on *our* snapshot commits, and a resumable batch loop gives
 replay/resume semantics directly (SURVEY.md §2.10). The loop body is pure
-DataFrame ops, so each epoch is one-to-two Spark jobs regardless of data
-size — driver orchestration cost is O(epochs), not O(rows).
+DataFrame ops, so each epoch is a fixed handful of Spark jobs regardless
+of data size (CoW: the pre-pass collect, the audit write when anything
+was quarantined, the merge write; MOR: the staging write, plus inline
+compaction) — driver orchestration cost is O(epochs), not O(rows).
 """
 
 from __future__ import annotations
@@ -52,7 +67,9 @@ from pyspark.sql import functions as F
 
 from ..functions.tokens import recompute_n_tok
 from ..operators.lww import lww_dedup, lww_dedup_salted
-from ..operators.merge import merge_upsert, merge_upsert_lww
+# merge_upsert is no longer called here; it stays importable from this
+# module because perfbench's tracer wraps the name (it counts 0 calls)
+from ..operators.merge import merge_upsert, merge_upsert_lww  # noqa: F401
 from ..session import expr_memo
 from ..sources.wal import WalSource
 from ..tables.format import LakeTable, _build_entries, bucket_expr
@@ -60,9 +77,10 @@ from ..tables.format import LakeTable, _build_entries, bucket_expr
 ENVELOPE_COLS = {"lsn", "epoch", "op", "ts"}
 
 
-def _watermark_filter(df, snap):
-    """Drop VALID rows at-or-below their bucket's committed watermark;
-    audit-lane rows (``_q == 1``) always pass — they are never applied.
+def _watermark_pass(snap):
+    """``lsn > <the row's bucket's committed watermark>`` as one Column,
+    or None when the table has no watermarks yet. Valid rows failing it
+    were applied by an earlier commit.
 
     The B watermarks ride the plan as ONE JSON string literal that
     from_json parses and Catalyst folds into a single array Literal,
@@ -74,7 +92,7 @@ def _watermark_filter(df, snap):
     """
     wm = snap.watermark
     if not wm:
-        return df
+        return None
     B = snap.num_buckets
     no_wm = -(1 << 63)
     wm_json = json.dumps([int(wm.get(str(b), no_wm)) for b in range(B)])
@@ -83,7 +101,17 @@ def _watermark_filter(df, snap):
         expr_memo(("engine.wm_idx", snap.key_column, B),
                   lambda: bucket_expr(snap.key_column, B) + 1),
     )
-    return df.filter((F.col("_q") == 1) | (F.col("lsn") > wm_col))
+    return F.col("lsn") > wm_col
+
+
+def _watermark_filter(df, snap):
+    """Drop VALID rows at-or-below their bucket's committed watermark
+    (``_watermark_pass``); audit-lane rows (``_q == 1``) always pass —
+    they are never applied."""
+    above = _watermark_pass(snap)
+    if above is None:
+        return df
+    return df.filter((F.col("_q") == 1) | above)
 
 
 @dataclass
@@ -113,14 +141,13 @@ class CdcEngine:
         strict_dq: bool = False,
         merge_mode: str = "cow",
         mor_compact_files: int | None = 8,
-        stats_max_footer_files: int = 256,
         commit_retries: int = 5,
         delta_blooms: bool = False,
     ):
         """``merge_mode``:
 
         - "cow" (copy-on-write, default): each epoch rewrites the touched
-          buckets via anti-join MERGE — reads stay plain scans.
+          buckets via one union+LWW MERGE — reads stay plain scans.
         - "mor" (merge-on-read): each epoch ADOPTS its staged deduped
           change-set as per-bucket delta files (write cost O(changes),
           never O(table)); readers resolve LWW at scan time; buckets are
@@ -133,6 +160,10 @@ class CdcEngine:
           are small relative to the table — the 10^10 steady state — or
           when uniform change spread makes CoW rewrite the whole table
           every epoch.
+
+        ``broadcast_threshold`` selects nothing: copy-on-write always
+        runs the single-exchange ``merge_upsert_lww``. It is still
+        accepted so existing callers (perfbench) keep working.
 
         ``delta_blooms``: attach a per-file key Bloom filter to every
         MOR delta file at adoption time (tables/bloom.py). Point lookups
@@ -149,13 +180,11 @@ class CdcEngine:
         self.checkpoint_dir = checkpoint_dir
         self.salted = salted
         self.num_salts = num_salts
-        self.broadcast_threshold = broadcast_threshold
         self.audit_quarantine = audit_quarantine
         self.strict_dq = strict_dq
         assert merge_mode in ("cow", "mor")
         self.merge_mode = merge_mode
         self.mor_compact_files = mor_compact_files
-        self.stats_max_footer_files = stats_max_footer_files
         self.commit_retries = commit_retries
         self.delta_blooms = delta_blooms
         os.makedirs(checkpoint_dir, exist_ok=True)
@@ -185,41 +214,16 @@ class CdcEngine:
     # ---------- per-bucket stats ----------
 
     def _staged_stats(self, valid_dir: str, snap):
-        """``({bucket: {rows, max_lsn}}, entries)`` for the staged
-        change-set.
+        """``({bucket: {rows, max_lsn}}, entries)`` for a MOR epoch's
+        staged change-set.
 
         The staged files are bucket-pure (part-0000i holds bucket i), so
         their parquet footers carry both: ``_build_entries`` reads them
-        on the shared I/O pool, and MOR adopts those same entries. CoW
-        above ``stats_max_footer_files`` staged files runs a DISTRIBUTED
-        stats job instead — a column-pruned scan of (key, lsn) grouped
-        by the bucket expression, B small rows collected — so driver
-        file opens never scale with the bucket count (10^4-10^5
-        buckets; crossover and flatness measured in BASELINE.md
-        'per-bucket stats collection'). That path returns no entries.
+        on the shared I/O pool, and MOR adopts those same entries. (CoW
+        stages nothing; its stats come from ``_cow_prepass``.)
         """
         if not os.path.isdir(valid_dir):
             return {}, []
-        n_files = sum(
-            1 for fn in os.listdir(valid_dir) if fn.endswith(".parquet")
-        )
-        if self.merge_mode == "cow" and n_files > self.stats_max_footer_files:
-            rows = (
-                self.spark.read.parquet(valid_dir)
-                .groupBy(
-                    bucket_expr(snap.key_column, snap.num_buckets).alias("_b")
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.max("lsn").alias("max_lsn"),
-                )
-                .collect()
-            )
-            return {
-                int(r["_b"]): {"rows": int(r["rows"]),
-                               "max_lsn": int(r["max_lsn"])}
-                for r in rows
-            }, None
         entries = _build_entries(valid_dir, "", snap.key_column, None)
         stats = {}
         for e in entries:
@@ -229,6 +233,62 @@ class CdcEngine:
                 )
             stats[e["bucket"]] = {"rows": e["rows"], "max_lsn": e["max_lsn"]}
         return stats, entries
+
+    def _cow_prepass(self, flagged, applies, snap):
+        """``({bucket: {rows, max_lsn}}, conflicts)`` for a CoW epoch from
+        ONE column-pruned aggregate over the flagged envelopes, grouped
+        by the bucket expression (B small rows collected; no driver
+        footer opens, so flat in the bucket count). Spark plans the
+        distinct count as HashAggregates over two small exchanges, on
+        (bucket, key) and then on bucket.
+
+        ``rows`` counts distinct keys among the rows the merge applies
+        (``applies``: valid and above the watermark) — exactly the LWW
+        winners — and ``max_lsn`` is their max lsn; ``conflicts`` is
+        ``sum(_q)`` over every envelope, taken before the audit filter.
+        The counts come from the aggregate itself, not an
+        ``Observation`` below it: a metrics observer under an aggregate
+        whose input the watermark empties fails in ``Observation.get``.
+        """
+        key = snap.key_column
+        rows = (
+            flagged.groupBy(
+                bucket_expr(key, snap.num_buckets).alias("_b")
+            )
+            .agg(
+                F.count_distinct(F.when(applies, F.col(key))).alias("rows"),
+                F.max(F.when(applies, F.col("lsn"))).alias("max_lsn"),
+                F.sum("_q").alias("q"),
+            )
+            .collect()
+        )
+        stats = {
+            int(r["_b"]): {"rows": int(r["rows"]),
+                           "max_lsn": int(r["max_lsn"])}
+            for r in rows if r["rows"]
+        }
+        return stats, sum(int(r["q"]) for r in rows)
+
+    def _fresh_quarantine_dir(self, epoch: int) -> str:
+        qdir = os.path.join(
+            self.checkpoint_dir, "quarantine", f"epoch-{epoch:05d}"
+        )
+        shutil.rmtree(qdir, ignore_errors=True)
+        return qdir
+
+    def _check_unique_keys(self, paths: list[str], key: str,
+                           epoch: int) -> None:
+        """``strict_dq``: key uniqueness re-checked on the WRITTEN files
+        (LWW output is unique per key by construction, so this guards
+        against regressions, not data; one extra job when enabled)."""
+        nk = self.spark.read.parquet(*paths).select(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.col(key)).alias("k"),
+        ).collect()[0]
+        if int(nk["n"]) != int(nk["k"]):
+            raise RuntimeError(
+                f"DQ FAIL epoch {epoch}: duplicate keys in the written files"
+            )
 
     # ---------- the loop ----------
 
@@ -424,14 +484,11 @@ class CdcEngine:
             snap = self.table.current()
 
         # 4. validate. Validity is a FLAG COLUMN (``_q``: 0 valid,
-        # 1 quarantined) rather than a DataFrame split: the whole epoch —
-        # valid lane and audit lane — rides ONE linear plan (one WAL
-        # scan, one shuffle, one staging write). A filter-based split
-        # would re-execute the scan per branch (Catalyst does not share
-        # scan subtrees across a union), which made the audit a serial
-        # second job in round 1 and a 16%-overhead extra scan branch in
-        # an intermediate design. Conflict counts come from the same
-        # single observe (A4 pattern — zero extra passes).
+        # 1 quarantined; never NULL) rather than a DataFrame split: each
+        # pass over the epoch reads valid lane and audit lane off one
+        # linear plan, and the conflict count rides a pass the epoch
+        # runs anyway (CoW: the pre-pass aggregate; MOR: one observe on
+        # the staging write — A4 pattern, zero extra passes).
         from ..functions.tokens import envelope_validity
 
         flagged = raw.withColumn(
@@ -439,6 +496,124 @@ class CdcEngine:
                 ("engine.validity",),
                 lambda: (~envelope_validity()).cast("int"))
         )
+        if self.merge_mode == "cow":
+            return self._apply_cow(flagged, snap, epoch, t0)
+        return self._apply_mor(flagged, raw.columns, snap, epoch, t0)
+
+    def _apply_cow(self, flagged, snap, epoch: int, t0: float) -> EpochResult:
+        """Copy-on-write epoch: pre-pass, audit lane, then ONE merge+write.
+
+        Nothing is staged: the merge consumes the raw envelopes and
+        resolves change-vs-change and change-vs-base LWW in one
+        aggregate, so the whole epoch's data movement is one exchange of
+        base+changes and one write.
+        """
+        key, B = snap.key_column, snap.num_buckets
+        # 5. the rows this epoch applies: valid, and above their bucket's
+        # committed watermark (exactly-once under partial replay and
+        # under redelivery with a new epoch id). The pre-pass counts and
+        # the merge input filter on this SAME predicate.
+        applies = F.col("_q") == 0
+        above = _watermark_pass(snap)
+        if above is not None:
+            applies = applies & above
+
+        # 6. pre-pass: touched buckets, lineage stats, conflict count
+        stats, conflicts = self._cow_prepass(flagged, applies, snap)
+
+        # 7. audit lane: quarantined envelopes, verbatim, straight from
+        # the WAL scan (only when there are any)
+        if self.audit_quarantine:
+            qdir = self._fresh_quarantine_dir(epoch)
+            if conflicts:
+                flagged.filter(F.col("_q") == 1).drop("_q").write.mode(
+                    "overwrite").parquet(qdir)
+            else:
+                os.makedirs(qdir, exist_ok=True)  # nothing quarantined
+        if not stats:
+            return EpochResult(
+                epoch=epoch, status="empty", conflicts=conflicts,
+                duration_sec=time.time() - t0,
+            )
+        touched = sorted(stats)
+        bucket_max_lsn = {b: s["max_lsn"] for b, s in stats.items()}
+        rows_valid = sum(s["rows"] for s in stats.values())
+
+        # 8. MERGE into touched buckets only (file-pruned base read).
+        # PINNED to the epoch's snapshot and CAS'd on its version at
+        # commit: the CoW files are a REWRITE of prior bucket state, so a
+        # concurrent writer's commit landing between this read and our
+        # publish would be lost without the guard (MOR needs neither —
+        # delta files carry only the epoch's changes and read-time LWW
+        # orders by lsn). The change side is the UN-deduped valid lane:
+        # merge_upsert_lww's one max_by picks each key's winner among
+        # base and changes alike, off a single repartition(B, key) that
+        # the bucket-pure write reuses. n_tok is recomputed on the change
+        # side (derive-if-missing/wrong; the union keeps the table's
+        # n_tok type under widening). The ``salted`` flag collapses a hot
+        # key to ≤ num_salts rows per salt stage BEFORE that exchange.
+        changes = flagged.filter(applies).drop("_q", "_bucket")
+        if self.salted:
+            changes = lww_dedup_salted(
+                changes, key=key, num_salts=self.num_salts
+            )
+        base = self.table.read(self.spark, buckets=touched, snapshot=snap)
+        merged = merge_upsert_lww(
+            base, recompute_n_tok(changes), key=key, num_partitions=B
+        )
+
+        # 9. write + DQ gate metrics in the SAME job (df.observe).
+        # write_data_files' repartition(B, key) is elided: the merge
+        # already partitioned on the key at B.
+        obs = Observation()
+        observed = merged.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(
+                F.when(F.col("n_tok") != F.size(F.col("tokens")), 1).otherwise(0)
+            ).alias("bad_ntok"),
+            F.sum(F.when(F.col(key).isNull(), 1).otherwise(0)).alias(
+                "null_keys"
+            ),
+        )
+        new_files = self.table.write_data_files(observed, touched)
+        m = obs.get
+
+        # DQ gate — abort BEFORE publish; written files stay orphaned
+        if int(m["bad_ntok"] or 0) != 0:
+            raise RuntimeError(
+                f"DQ FAIL epoch {epoch}: {m['bad_ntok']} rows violate "
+                "n_tok == size(tokens) — aborting before commit"
+            )
+        if int(m["null_keys"] or 0) != 0:
+            raise RuntimeError(
+                f"DQ FAIL epoch {epoch}: null keys reached merge — aborting"
+            )
+        if self.strict_dq and new_files:
+            self._check_unique_keys(
+                [os.path.join(self.table.root, f["path"]) for f in new_files],
+                key, epoch,
+            )
+
+        # 10. atomic publish + lineage + metrics (CAS on the snapshot
+        # the merge read — a loser raises ConcurrentCommitError and
+        # apply_changes_df re-runs the epoch against the new state)
+        self.table.commit(
+            epoch=epoch,
+            replaced_buckets=touched,
+            new_files=new_files,
+            bucket_max_lsn=bucket_max_lsn,
+            rows_applied=rows_valid,
+            props={"epoch": epoch},
+            expected_version=snap.version,
+        )
+        return self._committed(epoch, stats, rows_valid, conflicts, t0,
+                               int(m["rows"]))
+
+    def _apply_mor(self, flagged, raw_cols, snap, epoch: int,
+                   t0: float) -> EpochResult:
+        """Merge-on-read epoch: LWW + bucket-pure staging write in one
+        exchange; the staged files ARE the epoch's delta files."""
         obs_in = Observation()
         flagged = flagged.observe(
             obs_in,
@@ -466,19 +641,18 @@ class CdcEngine:
         # by (key, ""). Default plan: repartition(B, key) FIRST, then
         # groupBy(key, salt) — the aggregate's clustering requirement is
         # satisfied by the key partitioning, so dedup AND the bucket-pure
-        # staging write share ONE exchange (previously: groupBy shuffle
-        # on a synthetic string key + a second bucket repartition
-        # shuffle; guide §2.4). Trade, priced in BASELINE.md: the single
-        # exchange moves raw rows, so a pathological hot key lands on
-        # one reducer before collapsing — the ``salted`` flag keeps the
-        # two-stage plan (stage 1 collapses a hot key to ≤ num_salts
-        # rows before any bucket shuffle) for that regime.
+        # staging write share ONE exchange (guide §2.4). Trade, priced in
+        # BASELINE.md: the single exchange moves raw rows, so a
+        # pathological hot key lands on one reducer before collapsing —
+        # the ``salted`` flag keeps the two-stage plan (stage 1 collapses
+        # a hot key to ≤ num_salts rows before any bucket shuffle) for
+        # that regime.
         if self.salted:
             gk = F.when(
                 F.col("_q") == 1,
                 F.concat_ws(
                     "#", F.lit("~q"), F.col("lsn").cast("string"),
-                    F.xxhash64(*[F.col(c) for c in raw.columns]).cast("string"),
+                    F.xxhash64(*[F.col(c) for c in raw_cols]).cast("string"),
                 ),
             ).otherwise(F.col(snap.key_column).cast("string"))
             work = flagged.withColumn("_gk", gk)
@@ -487,13 +661,13 @@ class CdcEngine:
             )
         else:
             qsalt = expr_memo(
-                ("engine.qsalt", tuple(raw.columns)),
+                ("engine.qsalt", tuple(raw_cols)),
                 lambda: F.when(
                     F.col("_q") == 1,
                     F.concat_ws(
                         "#", F.col("lsn").cast("string"),
                         F.xxhash64(
-                            *[F.col(c) for c in raw.columns]
+                            *[F.col(c) for c in raw_cols]
                         ).cast("string"),
                     ),
                 ).otherwise(F.lit("")),
@@ -522,27 +696,20 @@ class CdcEngine:
         else:
             dedup = recompute_n_tok(dedup)
         dedup = dedup.drop("_bucket", "_gk")
-        # Materialize the deduped change-set to a staging parquet rather
-        # than .persist(): the change-set is consumed again by the MERGE,
-        # and Spark's local-mode MemoryStore serializes badly under many
-        # task threads (measured 2.3s → 27.6s from 8 → 32 threads for the
-        # same cache materialization, vs a parquet round-trip that scales).
-        # The explicit repartition(B, key) makes the staged files
-        # BUCKET-PURE (partition index == bucket_expr — murmur3-aligned),
-        # which yields per-bucket stats (rows, max lsn) nearly for free:
-        # parquet footer reads at small bucket counts, a column-pruned
-        # distributed job above stats_max_footer_files (_staged_stats).
-        # On a real cluster the staging write doubles as a deterministic
-        # restart point.
+        # 8. stage the deduped change-set. The explicit repartition(B,
+        # key) makes the staged files BUCKET-PURE (partition index ==
+        # bucket_expr — murmur3-aligned), so their parquet footers yield
+        # per-bucket stats (rows, max lsn) and adoption entries nearly
+        # for free (_staged_stats). partitionBy(_q) splits valid and
+        # quarantined rows into sibling dirs while KEEPING the
+        # partition-index == bucket file naming inside each (file
+        # part-0000i in _q=0 holds exactly bucket i's rows — the task id
+        # is the shuffle partition index; asserted by tests).
         stage_dir = os.path.join(
             self.checkpoint_dir, "stage", f"epoch-{epoch:05d}"
         )
         from ..tables.format import bucket_aligned_write
 
-        # partitionBy(_q) splits valid/quarantined into sibling dirs while
-        # KEEPING the partition-index == bucket file naming inside each
-        # (file part-0000i in _q=0 holds exactly bucket i's rows — the
-        # task id is the shuffle partition index; asserted by tests)
         with bucket_aligned_write(self.spark):
             dedup.repartition(B, F.col(snap.key_column)).write.mode(
                 "overwrite"
@@ -550,10 +717,7 @@ class CdcEngine:
         conflicts = int(obs_in.get["rows_q"] or 0)
         if self.audit_quarantine:
             qsrc = os.path.join(stage_dir, "_q=1")
-            qdir = os.path.join(
-                self.checkpoint_dir, "quarantine", f"epoch-{epoch:05d}"
-            )
-            shutil.rmtree(qdir, ignore_errors=True)
+            qdir = self._fresh_quarantine_dir(epoch)
             if os.path.isdir(qsrc):
                 shutil.move(qsrc, qdir)
             else:
@@ -561,225 +725,109 @@ class CdcEngine:
         valid_dir = os.path.join(stage_dir, "_q=0")
         try:
             # touched buckets + per-bucket max lsn + applied rows, and
-            # (footer path) the entries MOR adoption publishes
+            # the entries adoption publishes
             stats, staged_entries = self._staged_stats(valid_dir, snap)
             if not stats:
                 return EpochResult(
                     epoch=epoch, status="empty", conflicts=conflicts,
                     duration_sec=time.time() - t0,
                 )
-            # staged change-set re-read: LAZY — even constructing the
-            # reader costs a driver-side footer/schema pass per epoch,
-            # and the default MOR path (adopt-by-move) never consumes it
-            # (r6; guide §5: keep needless work off the driver)
-            dedup = None
             touched = sorted(stats)
             bucket_max_lsn = {b: s["max_lsn"] for b, s in stats.items()}
             rows_valid = sum(s["rows"] for s in stats.values())
             if self.strict_dq:
-                dedup = self.spark.read.parquet(valid_dir)
-                # key-uniqueness re-check (LWW output is unique per key by
-                # construction — groupBy(key) — so this guards against
-                # regressions, not data; one extra job when enabled)
-                nk = dedup.select(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_distinct(F.col(snap.key_column)).alias("k"),
-                ).collect()[0]
-                if int(nk["n"]) != int(nk["k"]):
-                    raise RuntimeError(
-                        f"DQ FAIL epoch {epoch}: duplicate keys after LWW dedup"
-                    )
+                self._check_unique_keys([valid_dir], snap.key_column, epoch)
 
-            # 8a. merge-on-read: the staged deduped change-set IS the
-            # delta content — adopt its bucket-pure files directly
-            # (driver-side move; write cost O(changes), never O(table)),
-            # publish, then compact any bucket that exceeded the delta
-            # budget (read-time LWW cost bound). With
+            # 9. adopt the staged change-set's bucket-pure files as delta
+            # files (driver-side move; write cost O(changes), never
+            # O(table)), publish, then compact any bucket that exceeded
+            # the delta budget (read-time LWW cost bound). With
             # ``mor_compact_files=None`` compaction is DEFERRED to the
             # ``maintain`` entry point (background job; it commits
             # through the same snapshot CAS so it serializes with
             # ingest) — the production shape, where ingest never absorbs
             # the fold (measured: a 13M-row inline fold cost one 123 s
             # epoch in the 55M soak; see BASELINE.md).
-            if self.merge_mode == "mor":
-                if self.delta_blooms and staged_entries:
-                    # per-bucket filters from the staged files (column-
-                    # pruned key read, O(changes)); entries keep the
-                    # bloom ref through adoption's path rewrite
-                    from ..tables.bloom import attach_blooms, bucket_blooms
+            if self.delta_blooms and staged_entries:
+                # per-bucket filters from the staged files (column-
+                # pruned key read, O(changes)); entries keep the
+                # bloom ref through adoption's path rewrite
+                from ..tables.bloom import attach_blooms, bucket_blooms
 
-                    blooms = bucket_blooms(
-                        self.spark.read.parquet(valid_dir),
-                        snap.key_column, B,
-                    )
-                    staged_entries = attach_blooms(
-                        self.table.root, staged_entries, blooms
-                    )
-                new_files = self.table.adopt_delta_files(
-                    valid_dir, touched, key_column=snap.key_column,
-                    entries=staged_entries,
+                blooms = bucket_blooms(
+                    self.spark.read.parquet(valid_dir),
+                    snap.key_column, B,
                 )
-                landed = self.table.commit(
-                    epoch=epoch,
-                    replaced_buckets=touched,
-                    new_files=new_files,
-                    bucket_max_lsn=bucket_max_lsn,
-                    rows_applied=rows_valid,
-                    props={"epoch": epoch, "mode": "mor"},
-                    delta=True,
+                staged_entries = attach_blooms(
+                    self.table.root, staged_entries, blooms
                 )
-                if landed is None:
-                    # fence no-op: a concurrent engine committed this
-                    # epoch between our fence check and our commit. The
-                    # table is exactly-once either way (our adopted
-                    # files are unreferenced orphans for GC); report
-                    # "skipped" so run summaries and lineage don't
-                    # double-count the winner's rows.
-                    return EpochResult(
-                        epoch=epoch, status="skipped",
-                        conflicts=conflicts,
-                        buckets_touched=len(touched),
-                        duration_sec=time.time() - t0,
-                    )
-                if self.mor_compact_files is not None:
-                    from ..tables.format import ConcurrentCommitError
-                    from ..tables.maintenance import compact
-
-                    try:
-                        compact(self.table, self.spark,
-                                max_files_per_bucket=self.mor_compact_files)
-                    except ConcurrentCommitError:
-                        # another writer/compactor folded the same inputs;
-                        # the epoch itself IS committed — don't let the
-                        # epoch retry loop re-run it over a lost fold
-                        pass
-                lineage = [
-                    {
-                        "epoch": epoch,
-                        "bucket": b,
-                        "lsn_max": s["max_lsn"],
-                        "rows_applied": s["rows"],
-                    }
-                    for b, s in sorted(stats.items())
-                ]
-                self._emit_lineage(epoch, lineage, rows_valid, conflicts,
-                                   time.time() - t0, rows_valid)
-                return EpochResult(
-                    epoch=epoch,
-                    status="committed",
-                    rows_valid=rows_valid,
-                    conflicts=conflicts,
-                    rows_applied=rows_valid,
-                    buckets_touched=len(touched),
-                    duration_sec=time.time() - t0,
-                    lineage=lineage,
-                )
-
-            # 8b. copy-on-write MERGE into touched buckets only
-            # (file-pruned base read). PINNED to the epoch's snapshot and
-            # CAS'd on its version at commit: the CoW files are a REWRITE
-            # of prior bucket state, so a concurrent writer's commit
-            # landing between this read and our publish would be lost
-            # without the guard (MOR needs neither — delta files carry
-            # only the epoch's changes and read-time LWW orders by lsn).
-            base = self.table.read(self.spark, buckets=touched,
-                                   snapshot=snap)
-            if dedup is None:
-                dedup = self.spark.read.parquet(valid_dir)
-            payload = [c for c in dedup.columns if c != "_bucket"]
-            if rows_valid <= self.broadcast_threshold:
-                # Broadcasting the change-keys skips shuffling the base
-                # into the anti join — the right plan when per-epoch
-                # changes ≪ table size (the 10^10-scale steady state):
-                # the base streams through one hash probe, and the only
-                # base shuffle left is the bucket-pure write's.
-                merged = merge_upsert(
-                    base,
-                    dedup.select(*payload),
-                    key=snap.key_column,
-                    broadcast_changes=True,
-                )
-            else:
-                # Bulk epochs: the broadcast build is SERIAL driver work
-                # and the shuffled anti join would exchange base AND
-                # change-keys once each BEFORE the write's own bucket
-                # exchange. The union+max_by merge resolves survivors,
-                # upserts and deletes in one aggregate whose required
-                # clustering comes from a repartition(B, key) — so the
-                # whole merge + bucket-pure write is ONE exchange of
-                # base+changes (equivalence property-tested in
-                # tests/test_properties.py; guide §2.4/§3).
-                merged = merge_upsert_lww(
-                    base,
-                    dedup.select(*payload),
-                    key=snap.key_column,
-                    num_partitions=B,
-                )
-            # 9. stage files + DQ gate metrics in the SAME job (df.observe).
-            # No repartition/partitionBy here: write_data_files shuffles
-            # once on the key at B partitions (= bucket assignment), and
-            # that shuffle is elided when the merge join already
-            # partitioned on the key.
-            obs = Observation()
-            observed = merged.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(
-                    F.when(F.col("n_tok") != F.size(F.col("tokens")), 1).otherwise(0)
-                ).alias("bad_ntok"),
-                F.sum(F.when(F.col(snap.key_column).isNull(), 1).otherwise(0)).alias(
-                    "null_keys"
-                ),
+            new_files = self.table.adopt_delta_files(
+                valid_dir, touched, key_column=snap.key_column,
+                entries=staged_entries,
             )
-            new_files = self.table.write_data_files(observed, touched)
-            m = obs.get
-
-            # DQ gate — abort BEFORE publish; staged files stay orphaned
-            if int(m["bad_ntok"] or 0) != 0:
-                raise RuntimeError(
-                    f"DQ FAIL epoch {epoch}: {m['bad_ntok']} rows violate "
-                    "n_tok == size(tokens) — aborting before commit"
-                )
-            if int(m["null_keys"] or 0) != 0:
-                raise RuntimeError(
-                    f"DQ FAIL epoch {epoch}: null keys reached merge — aborting"
-                )
-
-            # 10. atomic publish + lineage + metrics (CAS on the snapshot
-            # the merge read — a loser raises ConcurrentCommitError and
-            # apply_changes_df re-runs the epoch against the new state)
-            self.table.commit(
+            landed = self.table.commit(
                 epoch=epoch,
                 replaced_buckets=touched,
                 new_files=new_files,
                 bucket_max_lsn=bucket_max_lsn,
                 rows_applied=rows_valid,
-                props={"epoch": epoch},
-                expected_version=snap.version,
+                props={"epoch": epoch, "mode": "mor"},
+                delta=True,
             )
-            lineage = [
-                {
-                    "epoch": epoch,
-                    "bucket": b,
-                    "lsn_max": s["max_lsn"],
-                    "rows_applied": s["rows"],
-                }
-                for b, s in sorted(stats.items())
-            ]
-            self._emit_lineage(epoch, lineage, rows_valid, conflicts,
-                               time.time() - t0, int(m["rows"]))
-            return EpochResult(
-                epoch=epoch,
-                status="committed",
-                rows_valid=rows_valid,
-                conflicts=conflicts,
-                rows_applied=rows_valid,
-                buckets_touched=len(touched),
-                duration_sec=time.time() - t0,
-                lineage=lineage,
-            )
+            if landed is None:
+                # fence no-op: a concurrent engine committed this
+                # epoch between our fence check and our commit. The
+                # table is exactly-once either way (our adopted
+                # files are unreferenced orphans for GC); report
+                # "skipped" so run summaries and lineage don't
+                # double-count the winner's rows.
+                return EpochResult(
+                    epoch=epoch, status="skipped",
+                    conflicts=conflicts,
+                    buckets_touched=len(touched),
+                    duration_sec=time.time() - t0,
+                )
+            if self.mor_compact_files is not None:
+                from ..tables.format import ConcurrentCommitError
+                from ..tables.maintenance import compact
+
+                try:
+                    compact(self.table, self.spark,
+                            max_files_per_bucket=self.mor_compact_files)
+                except ConcurrentCommitError:
+                    # another writer/compactor folded the same inputs;
+                    # the epoch itself IS committed — don't let the
+                    # epoch retry loop re-run it over a lost fold
+                    pass
+            return self._committed(epoch, stats, rows_valid, conflicts, t0,
+                                   rows_valid)
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
+
+    def _committed(self, epoch, stats, rows_valid, conflicts, t0,
+                   table_rows) -> EpochResult:
+        """Emit the epoch's lineage record; return its committed result."""
+        lineage = [
+            {
+                "epoch": epoch,
+                "bucket": b,
+                "lsn_max": s["max_lsn"],
+                "rows_applied": s["rows"],
+            }
+            for b, s in sorted(stats.items())
+        ]
+        self._emit_lineage(epoch, lineage, rows_valid, conflicts,
+                           time.time() - t0, table_rows)
+        return EpochResult(
+            epoch=epoch,
+            status="committed",
+            rows_valid=rows_valid,
+            conflicts=conflicts,
+            rows_applied=rows_valid,
+            buckets_touched=len(stats),
+            duration_sec=time.time() - t0,
+            lineage=lineage,
+        )
 
     def _emit_lineage(self, epoch, lineage, rows_valid, conflicts, dur, table_rows):
         path = os.path.join(

@@ -425,12 +425,12 @@ def test_incremental_rollup_tracks_recompute(spark, tmpdir_clean):
 
 
 def test_stats_job_path_matches_footer_path(spark, tmpdir_clean):
-    """Forcing the distributed per-bucket stats job (the 10^4+-bucket
-    path: no O(buckets) driver footer opens) must produce the identical
-    final state, lineage stats and conflict counts as the footer path."""
+    """The CoW pre-pass (one distributed aggregate over the envelopes:
+    nothing staged, no O(buckets) driver footer opens) must produce the
+    identical final state, lineage stats and conflict counts as the MOR
+    footer path over its staged change-set."""
     table, wal, base = _setup(spark, tmpdir_clean, invalid_frac=0.05)
-    eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "c1"),
-                    stats_max_footer_files=0)  # always the job path
+    eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "c1"))
     results = eng.run()
     assert all(r.status == "committed" for r in results)
     assert sum(r.conflicts for r in results) > 0
@@ -442,10 +442,47 @@ def test_stats_job_path_matches_footer_path(spark, tmpdir_clean):
     table2, wal2, _ = _setup(spark, os.path.join(tmpdir_clean, "b"),
                              invalid_frac=0.05)
     eng2 = CdcEngine(spark, table2, wal2, os.path.join(tmpdir_clean, "c2"),
-                     audit_quarantine=False)
+                     merge_mode="mor", audit_quarantine=False)
     results2 = eng2.run()
     assert [r.lineage for r in results2] == [r.lineage for r in results]
     assert [r.conflicts for r in results2] == [r.conflicts for r in results]
+    assert_states_equal(expected, _collect_state(table2.read(spark), payload))
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_null_op_and_null_lsn_are_quarantined(spark, tmpdir_clean, mode):
+    """Validity is never NULL. An envelope with a NULL op (``isin`` on
+    NULL is NULL) must not join the valid LWW group and displace the
+    key's real update; one with a NULL lsn must not vanish at the
+    watermark (``NULL > wm``). Both are quarantined and counted."""
+    base = spark.createDataFrame(
+        [("doc_a", [1, 2], 2, "web"), ("doc_b", [3], 1, "web")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    table = bootstrap_table(os.path.join(tmpdir_clean, "table"), base,
+                            num_buckets=4)
+    env = spark.createDataFrame(
+        [(10, 0, "U", "doc_a", [7, 8, 9], 3, "api"),
+         (20, 0, None, "doc_a", [5], 1, "api"),
+         (None, 0, "U", "doc_b", [6], 1, "api")],
+        "lsn long, epoch int, op string, doc_id string, "
+        "tokens array<int>, n_tok int, source string",
+    )
+    ckpt = os.path.join(tmpdir_clean, "ckpt")
+    eng = CdcEngine(spark, table, WalSource(os.path.join(tmpdir_clean, "wal")),
+                    ckpt, merge_mode=mode, strict_dq=True)
+    res = eng.apply_changes_df(env, epoch=0)
+    assert (res.status, res.conflicts, res.rows_applied) == ("committed", 2, 1)
+    state = _collect_state(table.read(spark), ["tokens", "n_tok", "source"])
+    assert {k: (list(v["tokens"]), v["n_tok"], v["source"])
+            for k, v in state.items()} == {
+        "doc_a": ([7, 8, 9], 3, "api"),
+        "doc_b": ([3], 1, "web"),
+    }
+    q = spark.read.parquet(os.path.join(ckpt, "quarantine", "epoch-00000"))
+    assert {(r["lsn"], r["op"], r["doc_id"]) for r in q.collect()} == {
+        (20, None, "doc_a"), (None, "U", "doc_b"),
+    }
 
 
 def test_quarantine_rides_staging_job(spark, tmpdir_clean):

@@ -3,6 +3,7 @@ no per-row Python anywhere, file pruning on the merge's base read,
 broadcast of small change-sets."""
 
 import os
+import re
 from types import SimpleNamespace
 
 import pytest
@@ -214,3 +215,44 @@ def test_watermark_filter_reads_str_keyed_watermarks(spark):
     # both sides are exercised: some rows drop, and the no-watermark
     # bucket holds rows
     assert len(got) < df.count() and any(r[3] == 3 for r in got)
+
+
+def test_cow_epoch_stages_nothing_and_merges_off_one_exchange(
+        spark, tmp_path, monkeypatch):
+    """A copy-on-write epoch writes no staged change-set under
+    ``<ckpt>/stage/``, and what it writes to the table is planned off
+    ONE hash exchange on the key, over the base scan and the WAL scan
+    (write_data_files' own repartition is elided)."""
+    from e_commerce_batch_etl_pipeline_spark.sources.datagen import write_wal
+    from e_commerce_batch_etl_pipeline_spark.sources.wal import WalSource
+    from e_commerce_batch_etl_pipeline_spark.streaming.microbatch import (
+        CdcEngine,
+    )
+    from e_commerce_batch_etl_pipeline_spark.tables.format import LakeTable
+
+    root = str(tmp_path)
+    base = generate_base_docs(spark, 400, seed=7, max_len=16)
+    table = bootstrap_table(os.path.join(root, "t"), base, num_buckets=4)
+    write_wal(spark, os.path.join(root, "wal"), 2, 200, 400, seed=7,
+              max_len=16)
+    plans = []
+    write = LakeTable.write_data_files
+
+    def spy(self, df, *args, **kwargs):
+        # the frame write_data_files writes: its repartition(B, key)
+        plans.append(physical_plan(df.repartition(4, F.col("doc_id"))))
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", spy)
+    ckpt = os.path.join(root, "ckpt")
+    res = CdcEngine(spark, table, WalSource(os.path.join(root, "wal")),
+                    ckpt, merge_mode="cow").run()
+    assert [r.status for r in res] == ["committed", "committed"]
+    assert not os.path.exists(os.path.join(ckpt, "stage"))
+    assert len(plans) == 2
+    for plan in plans:
+        tree = plan.split("\n\n")[0]  # the operator tree, not details
+        assert tree.count("Exchange") == 1, plan
+        assert re.search(r"hashpartitioning\(doc_id#\d+, 4\)", plan), plan
+        assert tree.count("Scan parquet") == 2, plan
+        assert "BroadcastExchange" not in plan, plan

@@ -113,10 +113,10 @@ def test_split_replay_equals_single_replay(spark, rows):
           suppress_health_check=list(HealthCheck))
 @given(envelope_batches(), envelope_batches())
 def test_merge_lww_plan_equals_anti_join_plan(spark, base_rows, change_rows):
-    """``merge_upsert_lww`` (the bulk-epoch union+max_by plan) must be
+    """``merge_upsert_lww`` (the engine's union+max_by plan) must be
     row-identical to ``merge_upsert`` (anti join + union) for ANY base
-    state and ANY LWW-deduped change-set — the equivalence the engine's
-    broadcast-threshold switch rests on."""
+    state and ANY LWW-deduped change-set — the equivalence that let the
+    engine drop the broadcast plan."""
     from e_commerce_batch_etl_pipeline_spark.operators.merge import (
         merge_upsert_lww,
     )
@@ -143,6 +143,66 @@ def test_merge_lww_plan_equals_anti_join_plan(spark, base_rows, change_rows):
     assert a == b
     assert merge_upsert(base, changes).columns == \
         merge_upsert_lww(base, changes).columns
+
+
+@st.composite
+def raw_change_batches(draw):
+    """Un-deduped envelopes: several rows per key, lsn drawn with repeats
+    (a key may see a U and a D at the same lsn), and deletes of keys the
+    base may not hold. At most one upsert and one delete per (key, lsn):
+    the LWW order (lsn, op_rank) cannot break a tie between two
+    upserts."""
+    n = draw(st.integers(min_value=1, max_value=30))
+    seen, rows = set(), []
+    for _ in range(n):
+        key, lsn, op = draw(_keys), draw(st.integers(0, 12)), draw(_ops)
+        if (key, lsn, op == "D") in seen:
+            continue
+        seen.add((key, lsn, op == "D"))
+        rows.append({
+            "lsn": lsn, "epoch": 0, "op": op, "doc_id": key,
+            "tokens": None if op == "D" else draw(_tokens),
+            "n_tok": None, "source": None if op == "D" else "web",
+        })
+    return rows
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(envelope_batches(), raw_change_batches(), st.booleans())
+def test_merge_lww_over_raw_changes_equals_dedup_then_merge(
+        spark, base_rows, change_rows, drop_source):
+    """``merge_upsert_lww`` over UN-deduped envelopes resolves change vs
+    change too: it equals ``merge_upsert(base, lww_dedup(changes))`` —
+    several rows per key, equal-lsn U/D ties (D loses), deletes of absent
+    keys, and (``drop_source``) a change side missing a table column."""
+    from e_commerce_batch_etl_pipeline_spark.operators.merge import (
+        merge_upsert_lww,
+    )
+
+    base0 = spark.createDataFrame(
+        [], "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    bdf = spark.createDataFrame(
+        [tuple(r.values()) for r in base_rows], SCHEMA
+    )
+    base = merge_upsert(base0, lww_dedup(bdf), broadcast_changes=False)
+    changes = spark.createDataFrame(
+        [tuple(r.values()) for r in change_rows], SCHEMA
+    ).repartition(3)
+    if drop_source:
+        changes = changes.drop("source")
+
+    def rows(df):
+        return sorted(
+            (r["doc_id"], tuple(r["tokens"] or []), r["n_tok"], r["source"])
+            for r in df.collect()
+        )
+
+    want = merge_upsert(base, lww_dedup(changes), broadcast_changes=False)
+    got = merge_upsert_lww(base, changes, num_partitions=4)
+    assert rows(got) == rows(want)
+    assert got.columns == want.columns
 
 
 def test_merge_lww_plan_schema_evolution_alignment(spark):

@@ -9,7 +9,9 @@ of N repeats, with jobs labeled via setJobDescription. Also dumps
 Usage:
   python bench_extra.py queries [names...]   # per-query timings + plans
   python bench_extra.py replay               # replay micro-bench (CoW+MOR)
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
+     (default: the CPUs this process may run on), SPARK_DRIVER_MEMORY
+     (default: build_session's),
      BENCH_EXTRA_REPEATS (default 3), BENCH_EXTRA_PLANS_DIR (default none:
      set to e.g. plans/r06 with suffix via BENCH_EXTRA_PLAN_SUFFIX)
 """
@@ -24,7 +26,8 @@ import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 REPEATS = int(os.environ.get("BENCH_EXTRA_REPEATS", "3"))
 PLANS_DIR = os.environ.get("BENCH_EXTRA_PLANS_DIR", "")
 PLAN_SUFFIX = os.environ.get("BENCH_EXTRA_PLAN_SUFFIX", "")
@@ -37,8 +40,6 @@ def build(master=None, shuffle=None):
         app_name="bench-extra",
         master=master or f"local[{CPUS}]",
         shuffle_partitions=shuffle or CPUS,
-        extra_conf={"spark.driver.memory": os.environ.get(
-            "SPARK_DRIVER_MEMORY", "48g")},
     )
 
 

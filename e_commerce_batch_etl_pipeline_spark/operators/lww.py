@@ -19,11 +19,13 @@ Two physical strategies, same semantics (tested equivalent):
   (local[16]): plain max_by 0.44s vs salted 1.44s vs window row_number
   2.04s — the partial agg wins outright, and the window variant (which
   sorts the hot key's rows in one partition) is the one that melts.
-  NOTE (r6): the ENGINE's staging path now repartitions by the table
-  key at the bucket count BEFORE this aggregate so dedup + bucket-pure
-  write share one exchange; under that plan the hot key's raw rows do
-  land on one reducer first, which is why the ``salted`` flag (below)
-  remains the engine's hot-key escape hatch.
+  In the engine only the merge-on-read staging path calls it, and it
+  repartitions by the table key at the bucket count BEFORE this
+  aggregate so dedup + bucket-pure write share one exchange; under that
+  plan the hot key's raw rows do land on one reducer first, which is
+  why the ``salted`` flag (below) remains the engine's hot-key escape
+  hatch. Copy-on-write resolves LWW inside ``merge_upsert_lww``
+  (operators/merge.py) instead.
 - ``lww_dedup_salted``: explicit two-stage aggregate. Stage 1 groups by
   (key, salt) where salt = pmod(xxhash64(lsn), S); stage 2 reduces the S
   winners. Needed when the aggregation buffer cannot be combined
@@ -63,12 +65,11 @@ def lww_dedup(df: DataFrame, key="doc_id", order: str = "lsn") -> DataFrame:
     """Keep, per key, the row with max (order, op_rank). One aggregate.
 
     ``key`` may be one column name or a list (composite group key). The
-    engine's staging path groups by (table key, quarantine salt): because
-    the partitioning requirement of a multi-column groupBy is satisfied
-    by a child hash-partitioned on ANY subset of the group keys, a
-    ``repartition(B, table_key)`` upstream makes this aggregate run with
-    NO exchange of its own while its output stays bucket-pure — one
-    shuffle for dedup + bucket-aligned staging together (guide §2.4).
+    engine's merge-on-read staging path groups by the table key over a
+    ``repartition(B, table_key)``: that partitioning satisfies the
+    aggregate's clustering requirement, so it runs with NO exchange of
+    its own while its output stays bucket-pure — one shuffle for dedup
+    + bucket-aligned staging together (guide §2.4).
     """
     keys = [key] if isinstance(key, str) else list(key)
 

@@ -35,6 +35,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _align(base: DataFrame, changes: DataFrame):
+    """Schema-union alignment shared by both merges: ``(out_cols,
+    base_side, change_side)``.
+
+    The output schema is the UNION of base and change payloads: a column
+    the change side lacks (old-schema producer after additive evolution)
+    must survive on untouched rows and read as NULL on upserted rows —
+    dropping it would silently lose data for every survivor. So
+    ``base_side`` gains the change-only columns and ``change_side`` the
+    base-only ones, as typed NULLs; neither is projected yet.
+    """
+    ch_payload = changes.drop("op", "lsn", "epoch", "ts").columns
+    out_cols = list(base.columns) + [c for c in ch_payload if c not in base.columns]
+    ch_types = {f.name: f.dataType for f in changes.schema.fields}
+    base_types = {f.name: f.dataType for f in base.schema.fields}
+    base_side = base.withColumns({
+        c: F.lit(None).cast(ch_types[c])
+        for c in out_cols if c not in base.columns
+    })
+    change_side = changes.withColumns({
+        c: F.lit(None).cast(base_types[c])
+        for c in out_cols if c not in ch_payload
+    })
+    return out_cols, base_side, change_side
+
+
 def merge_upsert(
     base: DataFrame,
     changes: DataFrame,
@@ -47,28 +73,12 @@ def merge_upsert(
     {I, U, D}; its payload columns must be a superset of ``base``'s
     (schema evolution adds columns on the change side first).
     """
-    ch_payload = changes.drop("op", "lsn", "epoch", "ts").columns
-    # output schema = UNION of base and change payloads: a column the
-    # change side lacks (old-schema producer after additive evolution)
-    # must survive on untouched rows and read as NULL on upserted rows —
-    # dropping it would silently lose data for every survivor.
-    out_cols = list(base.columns) + [c for c in ch_payload if c not in base.columns]
-    ch_types = {f.name: f.dataType for f in changes.schema.fields}
-    base_types = {f.name: f.dataType for f in base.schema.fields}
-
+    out_cols, base_side, ch_side = _align(base, changes)
     change_keys = changes.select(key)
     if broadcast_changes:
         change_keys = F.broadcast(change_keys)
-    base_aligned = base
-    for c in out_cols:
-        if c not in base.columns:
-            base_aligned = base_aligned.withColumn(c, F.lit(None).cast(ch_types[c]))
-    survivors = base_aligned.select(*out_cols).join(change_keys, key, "left_anti")
-    upserts = changes.filter(F.col("op") != F.lit("D"))
-    for c in out_cols:
-        if c not in ch_payload:
-            upserts = upserts.withColumn(c, F.lit(None).cast(base_types[c]))
-    upserts = upserts.select(*out_cols)
+    survivors = base_side.select(*out_cols).join(change_keys, key, "left_anti")
+    upserts = ch_side.filter(F.col("op") != F.lit("D")).select(*out_cols)
     return survivors.unionByName(upserts)
 
 
@@ -101,25 +111,13 @@ def merge_upsert_lww(
     (guide §2.4 "remove shuffles outright"). The aggregate plans as a
     SortAggregate (variable-width ``max_by`` buffer, see operators/lww.py).
     """
-    ch_payload = changes.drop("op", "lsn", "epoch", "ts").columns
-    out_cols = list(base.columns) + [c for c in ch_payload if c not in base.columns]
-    ch_types = {f.name: f.dataType for f in changes.schema.fields}
-    base_types = {f.name: f.dataType for f in base.schema.fields}
-
-    base_aligned = base
-    for c in out_cols:
-        if c not in base.columns:
-            base_aligned = base_aligned.withColumn(c, F.lit(None).cast(ch_types[c]))
-    base_side = base_aligned.select(
+    out_cols, base_side, ch_side = _align(base, changes)
+    base_side = base_side.select(
         *out_cols,
         F.lit("U").alias("op"),
-        F.lit(None).cast(ch_types["lsn"]).alias("lsn"),
+        F.lit(None).cast(changes.schema["lsn"].dataType).alias("lsn"),
         F.lit(0).alias("_src"),
     )
-    ch_side = changes
-    for c in out_cols:
-        if c not in ch_payload:
-            ch_side = ch_side.withColumn(c, F.lit(None).cast(base_types[c]))
     ch_side = ch_side.select(*out_cols, "op", "lsn", F.lit(1).alias("_src"))
     unioned = base_side.unionByName(ch_side)
     if num_partitions is not None:

@@ -9,11 +9,12 @@ One epoch (microbatch) flows through (SURVEY.md §3.4):
 4. **validate** envelopes (Catalyst predicates); invalid → quarantine +
    conflict count (reference analog: PERMISSIVE-mode + business-rule
    filters, ``src/extract.py:40-48`` + ``src/transform.py:90-112``)
-5. **watermark filter** — valid rows with lsn ≤ their bucket's committed
-   watermark were applied by an earlier commit → dropped. This keeps a
-   partial replay, and applied rows redelivered under a NEW epoch id
-   (which no fence matches), exactly-once. The B watermarks are one
-   plan-time literal indexed by the bucket expression — no join
+5. **applied rows** — one predicate (``_applies``) picks the rows an
+   epoch applies: valid, and lsn above their bucket's committed
+   watermark (rows at or below it were applied by an earlier commit).
+   This keeps a partial replay, and applied rows redelivered under a NEW
+   epoch id (which no fence matches), exactly-once. The B watermarks are
+   one plan-time literal indexed by the bucket expression — no join
 
 Copy-on-write (default) then runs, with nothing staged:
 
@@ -34,8 +35,9 @@ Copy-on-write (default) then runs, with nothing staged:
 10. **atomic snapshot commit** (CAS on the merged snapshot) +
     per-partition lineage + metrics JSON + driver checkpoint
 
-Merge-on-read instead runs LWW dedup + n_tok recompute into ONE
-bucket-pure staging write (a ``df.observe`` on it counts conflicts), and
+Merge-on-read instead runs LWW dedup + n_tok recompute over the rows it
+applies into ONE bucket-pure staging write (a ``df.observe`` on it
+counts rows in and conflicts), writes the same audit lane as step 7, and
 adopts the staged files as the epoch's delta files — no table rewrite.
 
 Crash safety: a crash before publish leaves orphan written files that no
@@ -48,9 +50,10 @@ Why a driver epoch loop and not Structured Streaming: exactly-once here
 is fenced on *our* snapshot commits, and a resumable batch loop gives
 replay/resume semantics directly (SURVEY.md §2.10). The loop body is pure
 DataFrame ops, so each epoch is a fixed handful of Spark jobs regardless
-of data size (CoW: the pre-pass collect, the audit write when anything
-was quarantined, the merge write; MOR: the staging write, plus inline
-compaction) — driver orchestration cost is O(epochs), not O(rows).
+of data size (CoW: the pre-pass collect, the merge write; MOR: the
+staging write, plus inline compaction; both: the audit write only when
+anything was quarantined) — driver orchestration cost is O(epochs), not
+O(rows).
 """
 
 from __future__ import annotations
@@ -77,10 +80,12 @@ from ..tables.format import LakeTable, _build_entries, bucket_expr
 ENVELOPE_COLS = {"lsn", "epoch", "op", "ts"}
 
 
-def _watermark_pass(snap):
-    """``lsn > <the row's bucket's committed watermark>`` as one Column,
-    or None when the table has no watermarks yet. Valid rows failing it
-    were applied by an earlier commit.
+def _applies(snap):
+    """The rows an epoch applies, as one Column: valid (``_q == 0``) and
+    ``lsn > <the row's bucket's committed watermark>``. Valid rows
+    failing the watermark were applied by an earlier commit. Both modes
+    select on this one predicate: the CoW pre-pass and merge input, and
+    the MOR staging input.
 
     The B watermarks ride the plan as ONE JSON string literal that
     from_json parses and Catalyst folds into a single array Literal,
@@ -90,9 +95,10 @@ def _watermark_pass(snap):
     keyed by ``str(bucket)``; buckets without one get the LONG_MIN
     sentinel (lsn > LONG_MIN always).
     """
+    valid = F.col("_q") == 0
     wm = snap.watermark
     if not wm:
-        return None
+        return valid
     B = snap.num_buckets
     no_wm = -(1 << 63)
     wm_json = json.dumps([int(wm.get(str(b), no_wm)) for b in range(B)])
@@ -101,17 +107,7 @@ def _watermark_pass(snap):
         expr_memo(("engine.wm_idx", snap.key_column, B),
                   lambda: bucket_expr(snap.key_column, B) + 1),
     )
-    return F.col("lsn") > wm_col
-
-
-def _watermark_filter(df, snap):
-    """Drop VALID rows at-or-below their bucket's committed watermark
-    (``_watermark_pass``); audit-lane rows (``_q == 1``) always pass —
-    they are never applied."""
-    above = _watermark_pass(snap)
-    if above is None:
-        return df
-    return df.filter((F.col("_q") == 1) | above)
+    return valid & (F.col("lsn") > wm_col)
 
 
 @dataclass
@@ -213,7 +209,7 @@ class CdcEngine:
 
     # ---------- per-bucket stats ----------
 
-    def _staged_stats(self, valid_dir: str, snap):
+    def _staged_stats(self, stage_dir: str, snap):
         """``({bucket: {rows, max_lsn}}, entries)`` for a MOR epoch's
         staged change-set.
 
@@ -222,9 +218,9 @@ class CdcEngine:
         on the shared I/O pool, and MOR adopts those same entries. (CoW
         stages nothing; its stats come from ``_cow_prepass``.)
         """
-        if not os.path.isdir(valid_dir):
+        if not os.path.isdir(stage_dir):
             return {}, []
-        entries = _build_entries(valid_dir, "", snap.key_column, None)
+        entries = _build_entries(stage_dir, "", snap.key_column, None)
         stats = {}
         for e in entries:
             if "max_lsn" not in e:
@@ -235,17 +231,18 @@ class CdcEngine:
         return stats, entries
 
     def _cow_prepass(self, flagged, applies, snap):
-        """``({bucket: {rows, max_lsn}}, conflicts)`` for a CoW epoch from
-        ONE column-pruned aggregate over the flagged envelopes, grouped
-        by the bucket expression (B small rows collected; no driver
-        footer opens, so flat in the bucket count). Spark plans the
+        """``({bucket: {rows, max_lsn}}, conflicts, rows_in)`` for a CoW
+        epoch from ONE column-pruned aggregate over the flagged
+        envelopes, grouped by the bucket expression (B small rows
+        collected; no driver footer opens, so flat in the bucket
+        count). Spark plans the
         distinct count as HashAggregates over two small exchanges, on
         (bucket, key) and then on bucket.
 
         ``rows`` counts distinct keys among the rows the merge applies
         (``applies``: valid and above the watermark) — exactly the LWW
         winners — and ``max_lsn`` is their max lsn; ``conflicts`` is
-        ``sum(_q)`` over every envelope, taken before the audit filter.
+        ``sum(_q)`` and ``rows_in`` the row count over every envelope.
         The counts come from the aggregate itself, not an
         ``Observation`` below it: a metrics observer under an aggregate
         whose input the watermark empties fails in ``Observation.get``.
@@ -259,6 +256,7 @@ class CdcEngine:
                 F.count_distinct(F.when(applies, F.col(key))).alias("rows"),
                 F.max(F.when(applies, F.col("lsn"))).alias("max_lsn"),
                 F.sum("_q").alias("q"),
+                F.count(F.lit(1)).alias("n"),
             )
             .collect()
         )
@@ -267,14 +265,26 @@ class CdcEngine:
                            "max_lsn": int(r["max_lsn"])}
             for r in rows if r["rows"]
         }
-        return stats, sum(int(r["q"]) for r in rows)
+        return (stats, sum(int(r["q"]) for r in rows),
+                sum(int(r["n"]) for r in rows))
 
-    def _fresh_quarantine_dir(self, epoch: int) -> str:
+    def _write_audit(self, flagged, epoch: int, conflicts: int) -> None:
+        """Audit lane (with ``audit_quarantine``): a fresh
+        ``<ckpt>/quarantine/epoch-N`` holding the epoch's quarantined
+        envelopes verbatim, straight from the WAL scan. The write runs
+        only when ``conflicts > 0``, so its row count equals
+        ``conflicts``; otherwise the directory is left empty."""
+        if not self.audit_quarantine:
+            return
         qdir = os.path.join(
             self.checkpoint_dir, "quarantine", f"epoch-{epoch:05d}"
         )
         shutil.rmtree(qdir, ignore_errors=True)
-        return qdir
+        if conflicts:
+            flagged.filter(F.col("_q") == 1).drop("_q").write.mode(
+                "overwrite").parquet(qdir)
+        else:
+            os.makedirs(qdir, exist_ok=True)
 
     def _check_unique_keys(self, paths: list[str], key: str,
                            epoch: int) -> None:
@@ -498,7 +508,7 @@ class CdcEngine:
         )
         if self.merge_mode == "cow":
             return self._apply_cow(flagged, snap, epoch, t0)
-        return self._apply_mor(flagged, raw.columns, snap, epoch, t0)
+        return self._apply_mor(flagged, snap, epoch, t0)
 
     def _apply_cow(self, flagged, snap, epoch: int, t0: float) -> EpochResult:
         """Copy-on-write epoch: pre-pass, audit lane, then ONE merge+write.
@@ -513,27 +523,17 @@ class CdcEngine:
         # committed watermark (exactly-once under partial replay and
         # under redelivery with a new epoch id). The pre-pass counts and
         # the merge input filter on this SAME predicate.
-        applies = F.col("_q") == 0
-        above = _watermark_pass(snap)
-        if above is not None:
-            applies = applies & above
+        applies = _applies(snap)
 
         # 6. pre-pass: touched buckets, lineage stats, conflict count
-        stats, conflicts = self._cow_prepass(flagged, applies, snap)
+        stats, conflicts, rows_in = self._cow_prepass(flagged, applies, snap)
 
-        # 7. audit lane: quarantined envelopes, verbatim, straight from
-        # the WAL scan (only when there are any)
-        if self.audit_quarantine:
-            qdir = self._fresh_quarantine_dir(epoch)
-            if conflicts:
-                flagged.filter(F.col("_q") == 1).drop("_q").write.mode(
-                    "overwrite").parquet(qdir)
-            else:
-                os.makedirs(qdir, exist_ok=True)  # nothing quarantined
+        # 7. audit lane (only when anything was quarantined)
+        self._write_audit(flagged, epoch, conflicts)
         if not stats:
             return EpochResult(
-                epoch=epoch, status="empty", conflicts=conflicts,
-                duration_sec=time.time() - t0,
+                epoch=epoch, status="empty", rows_in=rows_in,
+                conflicts=conflicts, duration_sec=time.time() - t0,
             )
         touched = sorted(stats)
         bucket_max_lsn = {b: s["max_lsn"] for b, s in stats.items()}
@@ -607,136 +607,73 @@ class CdcEngine:
             props={"epoch": epoch},
             expected_version=snap.version,
         )
-        return self._committed(epoch, stats, rows_valid, conflicts, t0,
+        return self._committed(epoch, stats, rows_in, conflicts, t0,
                                int(m["rows"]))
 
-    def _apply_mor(self, flagged, raw_cols, snap, epoch: int,
+    def _apply_mor(self, flagged, snap, epoch: int,
                    t0: float) -> EpochResult:
-        """Merge-on-read epoch: LWW + bucket-pure staging write in one
-        exchange; the staged files ARE the epoch's delta files."""
-        obs_in = Observation()
-        flagged = flagged.observe(
-            obs_in,
+        """Merge-on-read epoch: LWW + bucket-pure staging write of the
+        rows it applies, in one exchange; the staged files ARE the
+        epoch's delta files. The audit lane is a separate write, only
+        when anything was quarantined."""
+        key, B = snap.key_column, snap.num_buckets
+        # the input and quarantine counts ride the staging write
+        obs = Observation()
+        changes = flagged.observe(
+            obs,
             *expr_memo(("engine.obs_in",), lambda: (
                 F.count(F.lit(1)).alias("rows_in"),
                 F.sum("_q").alias("rows_q"),
             )),
-        )
-        if not self.audit_quarantine:
-            # audit lane off: invalid rows are dropped after the counting
-            # observe (CollectMetrics is a pushdown barrier, so the
-            # counts see every row)
-            flagged = flagged.filter(F.col("_q") == 0)
+        ).filter(_applies(snap)).drop("_q", "_bucket")  # 5. applied rows
 
-        # 5. watermark filter (exactly-once under partial replay and
-        # under redelivery with a new epoch id)
-        flagged = _watermark_filter(flagged, snap)
-        B = snap.num_buckets
-
-        # 6. LWW dedup — deterministic winner per key by max lsn. The
-        # audit lane rides the same aggregate: its salt column
-        # ("<lsn>#<row-hash>", "" on valid rows) makes every quarantined
-        # row its own single-row group (identical duplicate invalid rows
-        # collapse — acceptable for audit data), while valid rows group
-        # by (key, ""). Default plan: repartition(B, key) FIRST, then
-        # groupBy(key, salt) — the aggregate's clustering requirement is
-        # satisfied by the key partitioning, so dedup AND the bucket-pure
-        # staging write share ONE exchange (guide §2.4). Trade, priced in
-        # BASELINE.md: the single exchange moves raw rows, so a
-        # pathological hot key lands on one reducer before collapsing —
-        # the ``salted`` flag keeps the two-stage plan (stage 1 collapses
-        # a hot key to ≤ num_salts rows before any bucket shuffle) for
-        # that regime.
+        # 6. LWW dedup — deterministic winner per key by max lsn.
+        # Default plan: repartition(B, key) FIRST, then groupBy(key) — the
+        # aggregate's clustering requirement is satisfied by the key
+        # partitioning, so dedup AND the bucket-pure staging write share
+        # ONE exchange (guide §2.4). Trade, priced in BASELINE.md: the
+        # single exchange moves raw rows, so a pathological hot key lands
+        # on one reducer before collapsing — the ``salted`` flag first
+        # collapses a hot key to ≤ num_salts rows (two-stage plan) for
+        # that regime. 7. n_tok recomputed (derive-if-missing/wrong).
         if self.salted:
-            gk = F.when(
-                F.col("_q") == 1,
-                F.concat_ws(
-                    "#", F.lit("~q"), F.col("lsn").cast("string"),
-                    F.xxhash64(*[F.col(c) for c in raw_cols]).cast("string"),
-                ),
-            ).otherwise(F.col(snap.key_column).cast("string"))
-            work = flagged.withColumn("_gk", gk)
-            dedup = lww_dedup_salted(
-                work, key="_gk", num_salts=self.num_salts
+            changes = lww_dedup_salted(
+                changes, key=key, num_salts=self.num_salts
             )
-        else:
-            qsalt = expr_memo(
-                ("engine.qsalt", tuple(raw_cols)),
-                lambda: F.when(
-                    F.col("_q") == 1,
-                    F.concat_ws(
-                        "#", F.col("lsn").cast("string"),
-                        F.xxhash64(
-                            *[F.col(c) for c in raw_cols]
-                        ).cast("string"),
-                    ),
-                ).otherwise(F.lit("")),
-            )
-            work = flagged.withColumn("_qsalt", qsalt).repartition(
-                B, F.col(snap.key_column)
-            )
-            dedup = lww_dedup(work, key=[snap.key_column, "_qsalt"])
-            # restore the envelope column order (staged parquet schema
-            # stays identical to the pre-optimization layout)
-            dedup = dedup.select(
-                *[c for c in flagged.columns if c in dedup.columns]
-            )
-        # 7. vectorized n_tok recompute (derive-if-missing/wrong) — valid
-        # lane only; audit rows keep their received n_tok verbatim
-        if "n_tok" in dedup.columns:
-            recv_col, keep_col = expr_memo(("engine.ntok_fold",), lambda: (
-                F.col("n_tok").cast("int"),
-                F.when(F.col("_q") == 1, F.col("_n_tok_recv"))
-                .otherwise(F.col("n_tok")),
-            ))
-            dedup = dedup.withColumn("_n_tok_recv", recv_col)
-            dedup = recompute_n_tok(dedup).withColumn(
-                "n_tok", keep_col
-            ).drop("_n_tok_recv")
-        else:
-            dedup = recompute_n_tok(dedup)
-        dedup = dedup.drop("_bucket", "_gk")
-        # 8. stage the deduped change-set. The explicit repartition(B,
-        # key) makes the staged files BUCKET-PURE (partition index ==
-        # bucket_expr — murmur3-aligned), so their parquet footers yield
+        staged = recompute_n_tok(
+            lww_dedup(changes.repartition(B, F.col(key)), key=key)
+        )
+        # 8. stage the deduped change-set. The repartition(B, key) makes
+        # the staged files BUCKET-PURE (partition index == bucket_expr —
+        # murmur3-aligned; file part-0000i holds exactly bucket i's
+        # rows, asserted by tests), so their parquet footers yield
         # per-bucket stats (rows, max lsn) and adoption entries nearly
-        # for free (_staged_stats). partitionBy(_q) splits valid and
-        # quarantined rows into sibling dirs while KEEPING the
-        # partition-index == bucket file naming inside each (file
-        # part-0000i in _q=0 holds exactly bucket i's rows — the task id
-        # is the shuffle partition index; asserted by tests).
+        # for free (_staged_stats).
         stage_dir = os.path.join(
             self.checkpoint_dir, "stage", f"epoch-{epoch:05d}"
         )
         from ..tables.format import bucket_aligned_write
 
         with bucket_aligned_write(self.spark):
-            dedup.repartition(B, F.col(snap.key_column)).write.mode(
-                "overwrite"
-            ).partitionBy("_q").parquet(stage_dir)
-        conflicts = int(obs_in.get["rows_q"] or 0)
-        if self.audit_quarantine:
-            qsrc = os.path.join(stage_dir, "_q=1")
-            qdir = self._fresh_quarantine_dir(epoch)
-            if os.path.isdir(qsrc):
-                shutil.move(qsrc, qdir)
-            else:
-                os.makedirs(qdir, exist_ok=True)  # nothing quarantined
-        valid_dir = os.path.join(stage_dir, "_q=0")
+            staged.write.mode("overwrite").parquet(stage_dir)
+        m = obs.get
+        rows_in, conflicts = int(m["rows_in"] or 0), int(m["rows_q"] or 0)
+        # the audit write re-reads the WAL, not the observed plan
+        self._write_audit(flagged, epoch, conflicts)
         try:
             # touched buckets + per-bucket max lsn + applied rows, and
             # the entries adoption publishes
-            stats, staged_entries = self._staged_stats(valid_dir, snap)
+            stats, staged_entries = self._staged_stats(stage_dir, snap)
             if not stats:
                 return EpochResult(
-                    epoch=epoch, status="empty", conflicts=conflicts,
-                    duration_sec=time.time() - t0,
+                    epoch=epoch, status="empty", rows_in=rows_in,
+                    conflicts=conflicts, duration_sec=time.time() - t0,
                 )
             touched = sorted(stats)
             bucket_max_lsn = {b: s["max_lsn"] for b, s in stats.items()}
             rows_valid = sum(s["rows"] for s in stats.values())
             if self.strict_dq:
-                self._check_unique_keys([valid_dir], snap.key_column, epoch)
+                self._check_unique_keys([stage_dir], key, epoch)
 
             # 9. adopt the staged change-set's bucket-pure files as delta
             # files (driver-side move; write cost O(changes), never
@@ -755,14 +692,13 @@ class CdcEngine:
                 from ..tables.bloom import attach_blooms, bucket_blooms
 
                 blooms = bucket_blooms(
-                    self.spark.read.parquet(valid_dir),
-                    snap.key_column, B,
+                    self.spark.read.parquet(stage_dir), key, B,
                 )
                 staged_entries = attach_blooms(
                     self.table.root, staged_entries, blooms
                 )
             new_files = self.table.adopt_delta_files(
-                valid_dir, touched, key_column=snap.key_column,
+                stage_dir, touched, key_column=key,
                 entries=staged_entries,
             )
             landed = self.table.commit(
@@ -783,7 +719,7 @@ class CdcEngine:
                 # double-count the winner's rows.
                 return EpochResult(
                     epoch=epoch, status="skipped",
-                    conflicts=conflicts,
+                    rows_in=rows_in, conflicts=conflicts,
                     buckets_touched=len(touched),
                     duration_sec=time.time() - t0,
                 )
@@ -799,14 +735,15 @@ class CdcEngine:
                     # the epoch itself IS committed — don't let the
                     # epoch retry loop re-run it over a lost fold
                     pass
-            return self._committed(epoch, stats, rows_valid, conflicts, t0,
+            return self._committed(epoch, stats, rows_in, conflicts, t0,
                                    rows_valid)
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
 
-    def _committed(self, epoch, stats, rows_valid, conflicts, t0,
+    def _committed(self, epoch, stats, rows_in, conflicts, t0,
                    table_rows) -> EpochResult:
         """Emit the epoch's lineage record; return its committed result."""
+        rows_valid = sum(s["rows"] for s in stats.values())
         lineage = [
             {
                 "epoch": epoch,
@@ -821,6 +758,7 @@ class CdcEngine:
         return EpochResult(
             epoch=epoch,
             status="committed",
+            rows_in=rows_in,
             rows_valid=rows_valid,
             conflicts=conflicts,
             rows_applied=rows_valid,

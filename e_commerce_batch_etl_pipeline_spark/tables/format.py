@@ -604,14 +604,32 @@ def bucket_aligned_write(spark):
     partition count of these writes IS the table layout, so runtime
     re-planning must not touch it here; AQE coalescing stays on everywhere
     else.
+
+    AQE's ``AQEPropagateEmptyRelation`` is excluded for the same writes:
+    when a shuffle stage comes out empty it replaces that stage's parent
+    subtree, and any ``df.observe`` (CollectMetrics) under it, with an
+    empty relation, so ``Observation.get`` finds no metrics row and
+    fails. A merge-on-read epoch whose rows are all quarantined or
+    below the watermark stages an empty shuffle and still reads its
+    counts from an observe. The rule is appended to any existing
+    exclusions and the previous value is restored on exit.
     """
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    excluded = "spark.sql.adaptive.optimizer.excludedRules"
+    old = {k: spark.conf.get(k, None) for k in (coalesce, excluded)}
+    rules = [r for r in (old[excluded] or "").split(",") if r]
+    spark.conf.set(coalesce, "false")
+    spark.conf.set(excluded, ",".join(rules + [
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    ]))
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def bucket_expr(key_col: str, num_buckets: int):

@@ -104,8 +104,8 @@ def main() -> None:
             merge_mode="mor",
             mor_compact_files=(None if args.defer_compaction
                                else args.compact_files),
-            # audit on: since round 3 the quarantine lane rides the same
-            # staging job (measured at parity with audit-off)
+            # audit on: quarantined rows get their own write, only in
+            # epochs that quarantine anything
         )
         maint = None
         if args.defer_compaction:

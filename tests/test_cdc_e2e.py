@@ -101,6 +101,30 @@ def test_redelivery_under_new_epoch_id_applies_nothing(
     assert_states_equal(before, _collect_state(table.read(spark), payload))
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_epoch_with_nothing_to_apply_is_empty(spark, tmpdir_clean, mode):
+    """An epoch that applies no row ends ``empty`` and commits nothing,
+    in both modes: a zero-row batch, and (audit lane off) epoch 0
+    re-applied under a new epoch id, whose rows the watermark drops. In
+    merge-on-read both stage an empty shuffle, whose observed counts
+    must still arrive."""
+    table, wal, base = _setup(spark, tmpdir_clean)
+    eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "ckpt"),
+                    merge_mode=mode, audit_quarantine=False)
+    v = table.current().version
+    env0 = wal.read_epoch(spark, 0)
+    res = eng.apply_changes_df(spark.createDataFrame([], env0.schema),
+                               epoch=EPOCHS + 10)
+    assert (res.status, res.rows_in, res.rows_applied) == ("empty", 0, 0)
+    assert table.current().version == v
+    eng.run()
+    v = table.current().version
+    res = eng.apply_changes_df(env0, epoch=EPOCHS + 11)
+    assert (res.status, res.rows_in, res.rows_applied) == (
+        "empty", env0.count(), 0)
+    assert table.current().version == v
+
+
 def test_replay_idempotent(spark, tmpdir_clean):
     table, wal, base = _setup(spark, tmpdir_clean)
     CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "c1")).run()
@@ -156,6 +180,13 @@ def test_skewed_hot_keys(spark, tmpdir_clean):
     payload = ["tokens", "n_tok", "source"]
     expected = _oracle_state(base, wal, spark, payload)
     assert_states_equal(expected, _collect_state(table.read(spark), payload))
+    # the salted plan in merge-on-read, on a fresh table
+    root = os.path.join(tmpdir_clean, "mor")
+    table2, wal2, _ = _setup(spark, root, num_hot_keys=1, hot_key_frac=0.5)
+    res = CdcEngine(spark, table2, wal2, os.path.join(root, "ckpt"),
+                    merge_mode="mor", salted=True, num_salts=8).run()
+    assert all(r.status == "committed" for r in res)
+    assert_states_equal(expected, _collect_state(table2.read(spark), payload))
 
 
 def test_schema_evolution_mid_stream(spark, tmpdir_clean):
@@ -179,6 +210,9 @@ def test_quarantine_and_lineage(spark, tmpdir_clean):
     eng = CdcEngine(spark, table, wal, ckpt)
     results = eng.run()
     assert sum(r.conflicts for r in results) > 0
+    assert [r.rows_in for r in results] == [
+        wal.read_epoch(spark, e).count() for e in wal.epochs()
+    ]
     # quarantined envelopes persisted for audit
     qdir = os.path.join(ckpt, "quarantine", "epoch-00000")
     assert spark.read.parquet(qdir).count() == results[0].conflicts
@@ -454,7 +488,9 @@ def test_null_op_and_null_lsn_are_quarantined(spark, tmpdir_clean, mode):
     """Validity is never NULL. An envelope with a NULL op (``isin`` on
     NULL is NULL) must not join the valid LWW group and displace the
     key's real update; one with a NULL lsn must not vanish at the
-    watermark (``NULL > wm``). Both are quarantined and counted."""
+    watermark (``NULL > wm``). Both are quarantined and counted, and the
+    audit lane keeps identical duplicates verbatim (two copies of the
+    NULL-op row), so it holds exactly ``conflicts`` rows."""
     base = spark.createDataFrame(
         [("doc_a", [1, 2], 2, "web"), ("doc_b", [3], 1, "web")],
         "doc_id string, tokens array<int>, n_tok int, source string",
@@ -464,6 +500,7 @@ def test_null_op_and_null_lsn_are_quarantined(spark, tmpdir_clean, mode):
     env = spark.createDataFrame(
         [(10, 0, "U", "doc_a", [7, 8, 9], 3, "api"),
          (20, 0, None, "doc_a", [5], 1, "api"),
+         (20, 0, None, "doc_a", [5], 1, "api"),
          (None, 0, "U", "doc_b", [6], 1, "api")],
         "lsn long, epoch int, op string, doc_id string, "
         "tokens array<int>, n_tok int, source string",
@@ -472,7 +509,8 @@ def test_null_op_and_null_lsn_are_quarantined(spark, tmpdir_clean, mode):
     eng = CdcEngine(spark, table, WalSource(os.path.join(tmpdir_clean, "wal")),
                     ckpt, merge_mode=mode, strict_dq=True)
     res = eng.apply_changes_df(env, epoch=0)
-    assert (res.status, res.conflicts, res.rows_applied) == ("committed", 2, 1)
+    assert (res.status, res.conflicts, res.rows_applied) == ("committed", 3, 1)
+    assert res.rows_in == 4
     state = _collect_state(table.read(spark), ["tokens", "n_tok", "source"])
     assert {k: (list(v["tokens"]), v["n_tok"], v["source"])
             for k, v in state.items()} == {
@@ -480,14 +518,16 @@ def test_null_op_and_null_lsn_are_quarantined(spark, tmpdir_clean, mode):
         "doc_b": ([3], 1, "web"),
     }
     q = spark.read.parquet(os.path.join(ckpt, "quarantine", "epoch-00000"))
-    assert {(r["lsn"], r["op"], r["doc_id"]) for r in q.collect()} == {
-        (20, None, "doc_a"), (None, "U", "doc_b"),
-    }
+    assert sorted((r["lsn"] or 0, r["op"] or "", r["doc_id"])
+                  for r in q.collect()) == [
+        (0, "U", "doc_b"), (20, "", "doc_a"), (20, "", "doc_a"),
+    ]
 
 
 def test_quarantine_rides_staging_job(spark, tmpdir_clean):
-    """audit_quarantine persists invalid rows from the SAME staging job
-    (partitionBy split), and the staged valid files stay bucket-pure."""
+    """Merge-on-read with audit_quarantine: each epoch's invalid rows are
+    persisted verbatim by the audit-lane write (count == conflicts), and
+    the delta files adopted from the staging write stay bucket-pure."""
     from e_commerce_batch_etl_pipeline_spark.tables.format import bucket_expr
 
     table, wal, base = _setup(spark, tmpdir_clean, invalid_frac=0.10)

@@ -25,9 +25,7 @@ from e_commerce_batch_etl_pipeline_spark.sources.datagen import (
     generate_wal_epoch,
 )
 from e_commerce_batch_etl_pipeline_spark.streaming.bootstrap import bootstrap_table
-from e_commerce_batch_etl_pipeline_spark.streaming.microbatch import (
-    _watermark_filter,
-)
+from e_commerce_batch_etl_pipeline_spark.streaming.microbatch import _applies
 
 
 def test_dedup_pipeline_is_pure_catalyst(spark):
@@ -188,7 +186,7 @@ def test_watermark_filter_folds_to_one_literal(spark, num_buckets):
         [("a", 1, 0), ("b", 10**6, 0), ("c", 1, 1)],
         "doc_id string, lsn long, _q int",
     )
-    qe = _watermark_filter(df, snap)._jdf.queryExecution()
+    qe = df.filter(_applies(snap))._jdf.queryExecution()
     optimized = qe.optimizedPlan().toString()
     assert "JsonToStructs" not in optimized
     assert "from_json" not in optimized
@@ -197,8 +195,8 @@ def test_watermark_filter_folds_to_one_literal(spark, num_buckets):
 
 def test_watermark_filter_reads_str_keyed_watermarks(spark):
     """``Snapshot.watermark`` keys are ``str(bucket)``: valid rows at or
-    below their bucket's watermark drop, rows in buckets without one and
-    audit-lane rows pass."""
+    below their bucket's watermark drop, valid rows in buckets without
+    one pass, and audit-lane rows are never applied."""
     from e_commerce_batch_etl_pipeline_spark.tables.format import bucket_expr
 
     df = spark.createDataFrame(
@@ -208,9 +206,9 @@ def test_watermark_filter_reads_str_keyed_watermarks(spark):
     ).withColumn("_b", bucket_expr("doc_id", 4))
     snap = SimpleNamespace(key_column="doc_id", num_buckets=4,
                            watermark={"0": 10, "1": 10, "2": 10})
-    got = {tuple(r) for r in _watermark_filter(df, snap).collect()}
+    got = {tuple(r) for r in df.filter(_applies(snap)).collect()}
     want = {tuple(r) for r in df.collect()
-            if r["_q"] == 1 or r["_b"] == 3 or r["lsn"] > 10}
+            if r["_q"] == 0 and (r["_b"] == 3 or r["lsn"] > 10)}
     assert got == want
     # both sides are exercised: some rows drop, and the no-watermark
     # bucket holds rows
@@ -256,3 +254,48 @@ def test_cow_epoch_stages_nothing_and_merges_off_one_exchange(
         assert re.search(r"hashpartitioning\(doc_id#\d+, 4\)", plan), plan
         assert tree.count("Scan parquet") == 2, plan
         assert "BroadcastExchange" not in plan, plan
+
+
+def test_mor_epoch_stages_applied_rows_off_one_exchange(
+        spark, tmp_path, monkeypatch):
+    """A merge-on-read epoch stages only the rows it applies: the
+    staging write is planned off ONE hash exchange on the key, its LWW
+    aggregate is keyed by the key alone (no per-row quarantine salt),
+    and the stage directory holds no ``_q=`` split, although the WAL
+    carries quarantined rows."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from e_commerce_batch_etl_pipeline_spark.sources.datagen import write_wal
+    from e_commerce_batch_etl_pipeline_spark.sources.wal import WalSource
+    from e_commerce_batch_etl_pipeline_spark.streaming.microbatch import (
+        CdcEngine,
+    )
+
+    root = str(tmp_path)
+    base = generate_base_docs(spark, 400, seed=7, max_len=16)
+    table = bootstrap_table(os.path.join(root, "t"), base, num_buckets=4)
+    write_wal(spark, os.path.join(root, "wal"), 2, 200, 400, seed=7,
+              max_len=16, invalid_frac=0.1)
+    staged = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        out = parquet(self, path, *args, **kwargs)
+        if os.sep + "stage" + os.sep in path:
+            staged.append((physical_plan(self._df), os.listdir(path)))
+        return out
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    res = CdcEngine(spark, table, WalSource(os.path.join(root, "wal")),
+                    os.path.join(root, "ckpt"), merge_mode="mor").run()
+    assert [r.status for r in res] == ["committed", "committed"]
+    assert all(r.conflicts > 0 for r in res)
+    assert len(staged) == 2
+    for plan, listing in staged:
+        tree = plan.split("\n\n")[0]  # the operator tree, not details
+        assert tree.count("Exchange") == 1, plan
+        assert re.search(r"hashpartitioning\(doc_id#\d+, 4\)", plan), plan
+        assert "xxhash64" not in plan, plan
+        keys = re.findall(r"Keys \[\d+\]: \[([^\]]*)\]", plan)
+        assert keys and all(re.fullmatch(r"doc_id#\d+", k) for k in keys), plan
+        assert not [f for f in listing if f.startswith("_q=")], listing

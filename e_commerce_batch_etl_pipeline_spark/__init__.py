@@ -7,11 +7,12 @@ re-expressed Spark-first per SURVEY.md:
 - ``tables``     — Iceberg-shaped lake table format (snapshot manifests,
                    atomic pointer swap, fence-set idempotency, schema
                    evolution as metadata-only DDL).
-- ``sources``    — schema-pinned readers (CSV/Parquet/JSON), WAL segment
-                   scan with LSN watermark, deterministic datagen.
-- ``operators``  — LWW dedup (windowed + salted two-stage), MERGE upsert,
-                   dedup family (exact/minhash/simhash/ngram), similarity
-                   search, data-quality checks.
+- ``sources``    — schema-pinned CSV reader, WAL segment scan with LSN
+                   watermark, deterministic datagen, lakefeed/WAL data
+                   sources.
+- ``operators``  — LWW dedup (``max_by`` + salted two-stage), MERGE
+                   upsert, near-dup family (minhash-LSH/simhash/jaccard),
+                   similarity search, as-of and range joins.
 - ``functions``  — vectorized token validation (Arrow/pandas UDF), text
                    analysis, multimodal column plumbing.
 - ``streaming``  — the epoch microbatch loop: checkpointed replay with

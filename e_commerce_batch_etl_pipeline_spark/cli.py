@@ -60,8 +60,10 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--checkpoint", required=True)
     r.add_argument("--max-epochs", type=int, default=None)
     r.add_argument("--salted", action="store_true",
-                   help="two-stage salted LWW (for non-combinable "
-                        "aggregation buffers; max_by doesn't need it)")
+                   help="two-stage salted LWW: collapses a hot key to "
+                        "<= num_salts rows before the epoch's single key "
+                        "exchange, which otherwise sends all of its raw "
+                        "rows to one reducer")
     r.add_argument("--merge-mode", choices=["cow", "mor"], default="cow",
                    help="copy-on-write (rewrite touched buckets) or "
                         "merge-on-read (append delta files, O(changes) "

@@ -32,8 +32,11 @@ Two physical strategies, same semantics (tested equivalent):
   map-side into O(1) per key (collect_list/set-style buffers, or
   window-function formulations); AQE's skew handling only splits skewed
   *join* partitions, never aggregation groups, so for those operators
-  this is the scale path (SURVEY.md §7.4). For max_by it is redundant —
-  kept, tested, and exposed via the engine's ``salted`` flag.
+  this is the scale path (SURVEY.md §7.4). A standalone max_by does not
+  need it, but the engine's single-exchange plans (MOR staging, the CoW
+  merge) send a hot key's raw rows to one reducer; the engine's
+  ``salted`` flag runs this first so stage 1 collapses the hot key to
+  ≤ S rows before that exchange.
 
 Neither uses a window over a shuffle-sort, but ``max_by(struct, lsn)``
 is not sort-free either: its buffer holds a variable-width struct, which

@@ -540,12 +540,11 @@ class CdcEngine:
         rows_valid = sum(s["rows"] for s in stats.values())
 
         # 8. MERGE into touched buckets only (file-pruned base read).
-        # PINNED to the epoch's snapshot and CAS'd on its version at
-        # commit: the CoW files are a REWRITE of prior bucket state, so a
-        # concurrent writer's commit landing between this read and our
-        # publish would be lost without the guard (MOR needs neither —
-        # delta files carry only the epoch's changes and read-time LWW
-        # orders by lsn). The change side is the UN-deduped valid lane:
+        # PINNED to the epoch's snapshot, which the commit names as
+        # ``planned``: the CoW files are a REWRITE of prior bucket state,
+        # so the publish refuses if any commit landed since (a lost
+        # update otherwise). MOR commits name it too, for the layout
+        # guard alone. The change side is the UN-deduped valid lane:
         # merge_upsert_lww's one max_by picks each key's winner among
         # base and changes alike, off a single repartition(B, key) that
         # the bucket-pure write reuses. n_tok is recomputed on the change
@@ -595,9 +594,9 @@ class CdcEngine:
                 key, epoch,
             )
 
-        # 10. atomic publish + lineage + metrics (CAS on the snapshot
-        # the merge read — a loser raises ConcurrentCommitError and
-        # apply_changes_df re-runs the epoch against the new state)
+        # 10. atomic publish + lineage + metrics (guarded on the
+        # snapshot the merge read — a loser raises ConcurrentCommitError
+        # and apply_changes_df re-runs the epoch against the new state)
         self.table.commit(
             epoch=epoch,
             replaced_buckets=touched,
@@ -605,7 +604,7 @@ class CdcEngine:
             bucket_max_lsn=bucket_max_lsn,
             rows_applied=rows_valid,
             props={"epoch": epoch},
-            expected_version=snap.version,
+            planned=snap,
         )
         return self._committed(epoch, stats, rows_in, conflicts, t0,
                                int(m["rows"]))
@@ -709,6 +708,10 @@ class CdcEngine:
                 rows_applied=rows_valid,
                 props={"epoch": epoch, "mode": "mor"},
                 delta=True,
+                # staged bucket-pure at this snapshot's bucket count: a
+                # rebucket since then refuses the commit, and the epoch
+                # re-runs against the new layout
+                planned=snap,
             )
             if landed is None:
                 # fence no-op: a concurrent engine committed this

@@ -4,8 +4,9 @@ The sandbox has no iceberg-spark-runtime jar, so the table layer implements
 the same *shape* of guarantees Iceberg gives (SURVEY.md §7.2) above plain
 Parquet:
 
-- **Immutable data files** under ``data/b=<bucket>/``, hash-bucketed by the
-  table key so an upsert only rewrites touched buckets (file-level pruning;
+- **Immutable data files** under ``data/commit-<attempt>/`` (one directory
+  per commit attempt), each file bucket-pure: hash-bucketed by the table
+  key so an upsert only rewrites touched buckets (file-level pruning;
   at 100 TB this is the difference between rewriting 100 TB per epoch and
   rewriting only the buckets an epoch's change-set touches).
 - **Snapshot manifests** ``metadata/snapshot-<v>.json`` listing the live
@@ -13,7 +14,10 @@ Parquet:
   directory listing, so partially-written files are invisible.
 - **Atomic commit**: write ``snapshot-<v+1>.json``, then ``os.replace`` the
   ``VERSION`` pointer — the same single-swap semantics as Iceberg's
-  metadata pointer (single-writer assumption, documented).
+  metadata pointer. Concurrent writers serialize on ``commit_lock`` and
+  CAS against the parent version; every snapshot after the first is
+  derived and published by ``LakeTable._publish``, and a writer whose
+  plan went stale gets ``ConcurrentCommitError`` and retries.
 - **Exactly-once fencing**: each snapshot carries the set of committed
   ``(epoch, bucket)`` units and a per-bucket high-LSN watermark; replaying
   an already-committed epoch is a metadata no-op, and rows with
@@ -32,6 +36,7 @@ of ``src/load.py:34-41`` live on in ``write_data_files``.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import threading
@@ -401,6 +406,15 @@ def _build_entries(
     return [e for e in _io_pool().map(one, cands) if e is not None]
 
 
+def _attempt_dir(root: str) -> tuple[str, str]:
+    """A fresh ``data/commit-<attempt>`` directory for one commit
+    attempt, as (path relative to the table root, absolute path).
+    Crashed attempts never collide, and files under it go live only
+    when a snapshot referencing them publishes."""
+    rel_dir = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
+    return rel_dir, os.path.join(root, rel_dir)
+
+
 def _may_contain_keys(entry: dict, sorted_keys: list) -> bool:
     """File-level key pruning: False only when the entry's key range
     provably excludes every requested key. Entries without stats are
@@ -488,8 +502,7 @@ def _write_manifest(md_dir: str, entries: list[dict]) -> str:
 def commit_lock(root: str, wait_sec: float | None = None):
     """Exclusive advisory commit lock (O_CREAT|O_EXCL — atomic on POSIX).
 
-    The snapshot log is single-writer by design (SURVEY.md §7.2); this
-    turns the *assumption* into an enforced invariant: two engines
+    Every publish holds it (``LakeTable._publish``), so two engines
     committing to one table serialize instead of silently
     last-write-winning the VERSION pointer.
 
@@ -648,8 +661,68 @@ def bucket_expr(key_col: str, num_buckets: int):
     return F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets)).cast("int")
 
 
+def _delta_schema(target: T.StructType) -> T.StructType:
+    """A delta file's schema: the table's columns plus the change's
+    ``op`` and ``lsn``."""
+    return T.StructType(list(target.fields) + [
+        T.StructField("op", T.StringType()),
+        T.StructField("lsn", T.LongType()),
+    ])
+
+
+class _FeedShaper:
+    """The change-feed output shape, shared by the endpoint diff and the
+    delta-only fast path: both join a FROM side against a TO side on the
+    key and differ only in the join and the op rule."""
+
+    def __init__(self, snap: Snapshot):
+        self.key = snap.key_column
+        self.target = snap.schema.to_struct()
+        self.payload = [
+            f.name for f in self.target.fields if f.name != self.key
+        ]
+
+    def side(self, df: DataFrame, name: str, *extra) -> DataFrame:
+        """``(key, struct(payload) AS name, *extra)`` with ``df``
+        reconciled to the TO schema: columns it lacks read as typed
+        NULLs, the rest are cast to the TO type."""
+        cols = {
+            f.name: F.col(f.name).cast(f.dataType) if f.name in df.columns
+            else F.lit(None).cast(f.dataType)
+            for f in self.target.fields
+        }
+        return df.select(
+            cols[self.key].alias(self.key),
+            F.struct(*[cols[c].alias(c) for c in self.payload]).alias(name),
+            *extra,
+        )
+
+    def rows(self, joined: DataFrame, op, side,
+             include_old: bool) -> DataFrame:
+        """``(_change_op, key, payload..., [_old_<col>...])``: rows whose
+        ``op`` is NULL are not changes; payload comes from the ``side``
+        struct; the ``_old_<col>`` pre-images are NULL where the key was
+        absent from the FROM state (``_ino`` NULL)."""
+        old_cols = [
+            F.when(F.col("_ino").isNotNull(), F.col("_old").getField(c))
+            .alias(f"_old_{c}")
+            for c in self.payload
+        ] if include_old else []
+        return (
+            joined.withColumn("_change_op", op)
+            .filter(F.col("_change_op").isNotNull())
+            .select(
+                "_change_op", self.key,
+                *[side.getField(c).alias(c) for c in self.payload],
+                *old_cols,
+            )
+        )
+
+
 class LakeTable:
-    """Single-writer, snapshot-isolated lake table."""
+    """Snapshot-isolated lake table. Writers serialize on
+    ``commit_lock``; every snapshot after the first publishes through
+    ``_publish``."""
 
     def __init__(self, root: str):
         self.root = root
@@ -996,10 +1069,6 @@ class LakeTable:
         dirty = sorted({f["bucket"] for f in delta_files})
         clean_base = [f for f in base_files if f["bucket"] not in dirty]
         dirty_base = [f for f in base_files if f["bucket"] in dirty]
-        delta_schema = T.StructType(
-            list(target.fields)
-            + [T.StructField("op", T.StringType()), T.StructField("lsn", T.LongType())]
-        )
         parts = []
         if dirty_base:
             parts.append(
@@ -1007,7 +1076,7 @@ class LakeTable:
                 .withColumn("op", F.lit("I"))
                 .withColumn("lsn", F.lit(-1).cast("long"))
             )
-        parts.append(scan(delta_files, delta_schema))
+        parts.append(scan(delta_files, _delta_schema(target)))
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
@@ -1103,7 +1172,6 @@ class LakeTable:
         """
         s1 = self.snapshot_at(from_version)
         s2 = self.snapshot_at(to_version)
-        key = s2.key_column
         paths1 = {f["path"] for f in s1.files}
         paths2 = {f["path"] for f in s2.files}
         added = [f for f in s2.files if f["path"] not in paths1]
@@ -1116,11 +1184,10 @@ class LakeTable:
                       for b in range(s1.num_buckets)}
             files2 = {b: sorted(f["path"] for f in s2.files if f["bucket"] == b)
                       for b in range(s2.num_buckets)}
-            changed = sorted(
+            old_buckets = new_buckets = [
                 b for b in range(s2.num_buckets)
                 if files1.get(b) != files2.get(b)
-            )
-            old_buckets = new_buckets = changed
+            ]
         else:
             # a rebucket in the range: bucket ids are NOT comparable
             # between the layouts (keys moved buckets, and under a SHRINK
@@ -1128,48 +1195,14 @@ class LakeTable:
             # pruned old-side read, surfacing live rows as spurious I).
             # Diff the full table — no pruning is sound across a layout
             # change.
-            changed = list(range(s2.num_buckets))
             old_buckets = new_buckets = None
-        target = s2.schema.to_struct()
-        payload = [f.name for f in target.fields if f.name != key]
-        if not changed:
-            # same column ORDER as the diff branch: (_change_op, key,
-            # payload...) — a key column that isn't first in the schema
-            # must not reorder the empty result
-            fields_by_name = {f.name: f for f in target.fields}
-            old_fields = (
-                [
-                    T.StructField(f"_old_{c}", fields_by_name[c].dataType)
-                    for c in payload
-                ]
-                if include_old else []
-            )
-            return spark.createDataFrame(
-                [], T.StructType(
-                    [T.StructField("_change_op", T.StringType()),
-                     fields_by_name[key]]
-                    + [fields_by_name[c] for c in payload]
-                    + old_fields
-                )
-            )
-
-        def normalize(df: DataFrame) -> DataFrame:
-            cols = [
-                F.col(f.name).cast(f.dataType) if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in target.fields
-            ]
-            return df.select(*cols)
-
-        old = normalize(self.read(spark, buckets=old_buckets, snapshot=s1))
-        new = normalize(self.read(spark, buckets=new_buckets, snapshot=s2))
-        o = old.select(
-            F.col(key), F.struct(*payload).alias("_old"), F.lit(1).alias("_ino")
-        )
-        n = new.select(
-            F.col(key), F.struct(*payload).alias("_new"), F.lit(1).alias("_inn")
-        )
-        j = o.join(n, key, "full_outer")
+        # with no changed bucket both reads are empty relations, and the
+        # diff plans to an empty result of the same shape
+        shape = _FeedShaper(s2)
+        o = shape.side(self.read(spark, buckets=old_buckets, snapshot=s1),
+                       "_old", F.lit(1).alias("_ino"))
+        n = shape.side(self.read(spark, buckets=new_buckets, snapshot=s2),
+                       "_new", F.lit(1).alias("_inn"))
         op = (
             F.when(F.col("_ino").isNull(), "I")
             .when(F.col("_inn").isNull(), "D")
@@ -1178,23 +1211,8 @@ class LakeTable:
         side = F.when(F.col("_inn").isNull(), F.col("_old")).otherwise(
             F.col("_new")
         )
-        old_cols = (
-            [
-                F.when(F.col("_ino").isNotNull(), F.col("_old").getField(c))
-                .alias(f"_old_{c}")
-                for c in payload
-            ]
-            if include_old else []
-        )
-        return (
-            j.withColumn("_change_op", op)
-            .filter(F.col("_change_op").isNotNull())
-            .select(
-                "_change_op", key,
-                *[side.getField(c).alias(c) for c in payload],
-                *old_cols,
-            )
-        )
+        return shape.rows(o.join(n, shape.key, "full_outer"), op, side,
+                          include_old)
 
     @staticmethod
     def _delta_only_range(s1, s2, added: list[dict],
@@ -1256,35 +1274,16 @@ class LakeTable:
         """
         from ..operators.lww import lww_dedup
 
-        key = s2.key_column
-        target = s2.schema.to_struct()
-        payload = [f.name for f in target.fields if f.name != key]
-        delta_schema = T.StructType(
-            list(target.fields)
-            + [T.StructField("op", T.StringType()),
-               T.StructField("lsn", T.LongType())]
-        )
+        shape = _FeedShaper(s2)
         paths = [os.path.join(self.root, f["path"]) for f in added]
         latest = lww_dedup(
-            spark.read.schema(delta_schema).parquet(*paths),
-            key=key, order="lsn",
+            spark.read.schema(_delta_schema(shape.target)).parquet(*paths),
+            key=shape.key, order="lsn",
         )
         changed_buckets = sorted({f["bucket"] for f in added})
-        old = self.read(spark, buckets=changed_buckets, snapshot=s1)
-        old = old.select(*[
-            F.col(f.name).cast(f.dataType) if f.name in old.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in target.fields
-        ])
-        o = old.select(
-            F.col(key), F.struct(*payload).alias("_old"),
-            F.lit(1).alias("_ino"),
-        )
-        n = latest.select(
-            F.col(key), F.col("op").alias("_dop"),
-            F.struct(*payload).alias("_new"),
-        )
-        j = n.join(o, key, "left_outer")
+        o = shape.side(self.read(spark, buckets=changed_buckets, snapshot=s1),
+                       "_old", F.lit(1).alias("_ino"))
+        n = shape.side(latest, "_new", F.col("op").alias("_dop"))
         op = (
             F.when(
                 F.col("_dop") == "D",
@@ -1296,23 +1295,8 @@ class LakeTable:
         side = F.when(F.col("_dop") == "D", F.col("_old")).otherwise(
             F.col("_new")
         )
-        old_cols = (
-            [
-                F.when(F.col("_ino").isNotNull(), F.col("_old").getField(c))
-                .alias(f"_old_{c}")
-                for c in payload
-            ]
-            if include_old else []
-        )
-        return (
-            j.withColumn("_change_op", op)
-            .filter(F.col("_change_op").isNotNull())
-            .select(
-                "_change_op", key,
-                *[side.getField(c).alias(c) for c in payload],
-                *old_cols,
-            )
-        )
+        return shape.rows(n.join(o, shape.key, "left_outer"), op, side,
+                          include_old)
 
     # ---------- write path ----------
 
@@ -1332,9 +1316,8 @@ class LakeTable:
         already hash-partitioned on the key at B partitions is elided).
         This is the reference's file-count control (``src/load.py:34-41``)
         upgraded into the commit protocol. One output dir per commit
-        attempt (uuid): crashed attempts never collide, files become live
-        only when a snapshot referencing them publishes. Buckets that end
-        up empty (all rows deleted) produce no file and drop out.
+        attempt (``_attempt_dir``). Buckets that end up empty (all rows
+        deleted) produce no file and drop out.
 
         ``sort_by_key`` + ``max_records_per_file`` produce SORTED,
         SIZE-SPLIT buckets (Iceberg sort-order compaction): several files
@@ -1344,9 +1327,7 @@ class LakeTable:
         (hash-scattered) key range and can never be pruned by key.
         """
         snap = self.current()
-        attempt = uuid.uuid4().hex[:12]
-        rel_dir = os.path.join("data", f"commit-{attempt}")
-        out_dir = os.path.join(self.root, rel_dir)
+        rel_dir, out_dir = _attempt_dir(self.root)
         out = df.drop("_bucket").repartition(
             snap.num_buckets, F.col(snap.key_column)
         )
@@ -1393,18 +1374,19 @@ class LakeTable:
         rows_applied: int = 0,
         props: dict | None = None,
         delta: bool = False,
-        expected_version: int | None = None,
+        planned: Snapshot | None = None,
         replace_files: list[str] | None = None,
     ) -> Snapshot | None:
         """Publish a new snapshot for ``replaced_buckets``.
 
-        ``expected_version``: optimistic-concurrency guard for commits
-        whose NEW FILES were derived from a snapshot read OUTSIDE the
-        lock (rebucket): if the table advanced past that version,
-        publishing would dereference data the files don't contain (lost
-        update) — raise ConcurrentCommitError so the caller re-reads and
-        retries. Ingest epochs don't need it: their files carry the
-        epoch's changes, not a rewrite of prior state.
+        ``planned``: the snapshot ``new_files`` were derived from (see
+        ``_publish``). The commit raises ConcurrentCommitError, so the
+        caller re-reads and retries, when the head's bucket layout is no
+        longer the planned one (the files carry the old layout's bucket
+        ids: a concurrent rebucket), and, for a copy-on-write commit,
+        when the head moved past ``planned`` at all (the rewrite of the
+        planned buckets would drop what landed since: a lost update).
+        Ingest epochs and compaction pass it; ``None`` skips both guards.
 
         ``replace_files``: FILE-level rewrite (Iceberg rewrite_data_files
         shape, used by compaction): the new snapshot dereferences exactly
@@ -1429,104 +1411,117 @@ class LakeTable:
         call is a no-op returning None (replay safety). Atomicity: the
         VERSION pointer swap is a single ``os.replace``.
         """
-        with commit_lock(self.root) as tok:
-            return self._commit_locked(
-                epoch, replaced_buckets, new_files, bucket_max_lsn,
-                rows_applied, props, delta, expected_version,
-                replace_files, lock_token=tok,
-            )
-
-    def _commit_locked(
-        self, epoch, replaced_buckets, new_files, bucket_max_lsn,
-        rows_applied, props, delta=False, expected_version=None,
-        replace_files=None, lock_token=None,
-    ) -> Snapshot | None:
-        # re-read under the lock: CAS against concurrent writers
-        snap = self.current()
-        if expected_version is not None and snap.version != expected_version:
-            raise ConcurrentCommitError(
-                f"table advanced v{expected_version}→v{snap.version} since "
-                "the rewrite read its input; retry against the new state"
-            )
-        if replace_files is not None:
-            live = {f["path"] for f in snap.files}
-            gone = set(replace_files) - live
-            if gone:
-                raise ConcurrentCommitError(
-                    f"{len(gone)} rewrite input files already dereferenced "
-                    "(concurrent rewrite folded them); retry"
-                )
-            replace_set = set(replace_files)
-            dirty = {
-                f["bucket"] for f in snap.files if f["path"] in replace_set
-            } | {f["bucket"] for f in new_files}
-            new_snap = Snapshot(
-                version=snap.version + 1,
-                schema=snap.schema,
-                key_column=snap.key_column,
-                num_buckets=snap.num_buckets,
-                files=[f for f in snap.files if f["path"] not in replace_set]
-                + new_files,
-                fences=snap.fences,
-                watermark=snap.watermark,
-                min_fenced_epoch=snap.min_fenced_epoch,
-                parent=snap.version,
-                committed_at=time.time(),
-                props={**snap.props, **(props or {})},
-            )
-            self._write_snapshot(new_snap, cas_parent=snap.version,
-                                 lock_token=lock_token,
-                                 parent_manifests=snap.manifests,
-                                 dirty_buckets=dirty)
-            return new_snap
-        if replaced_buckets and snap.units_fenced(epoch, replaced_buckets):
-            return None  # already applied — exactly-once fence
-        replaced = set(replaced_buckets)
+        props = props or {}
         if delta:
-            keep = list(snap.files)
             new_files = [{**f, "kind": "delta"} for f in new_files]
-        else:
-            keep = [f for f in snap.files if f["bucket"] not in replaced]
-        fences = dict(snap.fences)
-        watermark = dict(snap.watermark)
-        for b in replaced_buckets:
-            ml = int(bucket_max_lsn.get(b, watermark.get(str(b), -1)))
-            fences[f"{epoch}:{b}"] = {"max_lsn": ml}
-            watermark[str(b)] = max(int(watermark.get(str(b), -1)), ml)
-        # prune the fence horizon: keep the newest FENCE_KEEP_EPOCHS
-        # ingest epochs; older ingest epochs + old compaction fences
-        # collapse into min_fenced_epoch (bootstrap's fence is kept)
-        min_fenced = snap.min_fenced_epoch
-        ingest_epochs = sorted(
-            {e for e in (int(k.split(":")[0]) for k in fences) if e >= 0}
-        )
-        if len(ingest_epochs) > FENCE_KEEP_EPOCHS:
-            cutoff = ingest_epochs[-FENCE_KEEP_EPOCHS]
-            fences = {
-                k: v for k, v in fences.items()
-                if int(k.split(":")[0]) >= cutoff
-                or int(k.split(":")[0]) == BOOTSTRAP_EPOCH
-            }
-            min_fenced = max(min_fenced, cutoff) if min_fenced is not None else cutoff
-        new_snap = Snapshot(
-            version=snap.version + 1,
-            schema=snap.schema,
-            key_column=snap.key_column,
-            num_buckets=snap.num_buckets,
-            files=keep + new_files,
-            fences=fences,
-            watermark=watermark,
-            min_fenced_epoch=min_fenced,
-            parent=snap.version,
-            committed_at=time.time(),
-            props={**snap.props, **(props or {}), "rows_applied": rows_applied},
-        )
-        dirty = set(replaced_buckets) | {f["bucket"] for f in new_files}
-        self._write_snapshot(new_snap, cas_parent=snap.version,
-                             lock_token=lock_token,
-                             parent_manifests=snap.manifests,
-                             dirty_buckets=dirty)
-        return new_snap
+        added = {f["bucket"] for f in new_files}
+
+        def derive(head):
+            if replace_files is not None:
+                replace_set = set(replace_files)
+                gone = replace_set - {f["path"] for f in head.files}
+                if gone:
+                    raise ConcurrentCommitError(
+                        f"{len(gone)} rewrite input files already "
+                        "dereferenced (concurrent rewrite folded them); "
+                        "retry"
+                    )
+                return {
+                    "files": [f for f in head.files
+                              if f["path"] not in replace_set] + new_files,
+                    "props": {**head.props, **props},
+                }, added | {f["bucket"] for f in head.files
+                            if f["path"] in replace_set}
+            if replaced_buckets and head.units_fenced(epoch, replaced_buckets):
+                return None  # already applied — exactly-once fence
+            replaced = set(replaced_buckets)
+            keep = head.files if delta else [
+                f for f in head.files if f["bucket"] not in replaced
+            ]
+            fences = dict(head.fences)
+            watermark = dict(head.watermark)
+            for b in replaced_buckets:
+                ml = int(bucket_max_lsn.get(b, watermark.get(str(b), -1)))
+                fences[f"{epoch}:{b}"] = {"max_lsn": ml}
+                watermark[str(b)] = max(int(watermark.get(str(b), -1)), ml)
+            # prune the fence horizon: keep the newest FENCE_KEEP_EPOCHS
+            # ingest epochs; older ingest epochs + old compaction fences
+            # collapse into min_fenced_epoch (bootstrap's fence is kept)
+            min_fenced = head.min_fenced_epoch
+            ingest_epochs = sorted(
+                {e for e in (int(k.split(":")[0]) for k in fences) if e >= 0}
+            )
+            if len(ingest_epochs) > FENCE_KEEP_EPOCHS:
+                cutoff = ingest_epochs[-FENCE_KEEP_EPOCHS]
+                fences = {
+                    k: v for k, v in fences.items()
+                    if int(k.split(":")[0]) >= cutoff
+                    or int(k.split(":")[0]) == BOOTSTRAP_EPOCH
+                }
+                min_fenced = (cutoff if min_fenced is None
+                              else max(min_fenced, cutoff))
+            return {
+                "files": keep + new_files,
+                "fences": fences,
+                "watermark": watermark,
+                "min_fenced_epoch": min_fenced,
+                "props": {**head.props, **props,
+                          "rows_applied": rows_applied},
+            }, replaced | added
+
+        return self._publish(derive, planned,
+                             rewrite=not delta and replace_files is None)
+
+    def _publish(self, derive, planned: Snapshot | None = None,
+                 rewrite: bool = False) -> Snapshot | None:
+        """The one path that publishes every snapshot after ``create``.
+
+        Under ``commit_lock`` it re-reads the head and guards the
+        snapshot the caller planned against (``planned``; None skips the
+        guards, for callers that plan under the lock): the head must have
+        the planned bucket layout, since files staged bucket-pure for
+        another bucket count carry the wrong bucket ids; and a
+        ``rewrite`` of prior state needs the planned version itself,
+        since publishing over a later head would drop what landed since
+        (a lost update). A refusal is a ConcurrentCommitError: the caller
+        re-plans against the new head. This is the optimistic commit
+        check of Delta Lake's log, which fails a transaction whose read
+        metadata changed under it.
+
+        ``derive(head)`` returns ``(changes, dirty)``: the snapshot
+        fields that change, and the buckets whose manifests must be
+        rewritten (None: all of them; unchanged buckets reuse the head's
+        manifests) — or None for a fenced no-op. Version, parent and
+        commit time are set here.
+        """
+        with commit_lock(self.root) as tok:
+            head = self.current()
+            if planned is not None:
+                if head.num_buckets != planned.num_buckets:
+                    raise ConcurrentCommitError(
+                        f"bucket layout changed {planned.num_buckets}→"
+                        f"{head.num_buckets} buckets since v{planned.version}"
+                        "; the files were written for the old layout — retry"
+                    )
+                if rewrite and head.version != planned.version:
+                    raise ConcurrentCommitError(
+                        f"table advanced v{planned.version}→v{head.version} "
+                        "since the rewrite read its input; retry against "
+                        "the new state"
+                    )
+            derived = derive(head)
+            if derived is None:
+                return None
+            changes, dirty = derived
+            snap = dataclasses.replace(
+                head, version=head.version + 1, parent=head.version,
+                committed_at=time.time(), manifests=None, **changes,
+            )
+            self._write_snapshot(snap, cas_parent=head.version,
+                                 lock_token=tok,
+                                 parent_manifests=head.manifests,
+                                 dirty_buckets=dirty)
+            return snap
 
     def adopt_delta_files(
         self, stage_dir: str, buckets_touched: list[int] | None = None,
@@ -1548,9 +1543,7 @@ class LakeTable:
         just read. Precomputed ``entries`` keep their stats; only their
         ``path`` is rewritten into this commit's directory.
         """
-        attempt = uuid.uuid4().hex[:12]
-        rel_dir = os.path.join("data", f"commit-{attempt}")
-        out_dir = os.path.join(self.root, rel_dir)
+        rel_dir, out_dir = _attempt_dir(self.root)
         os.makedirs(out_dir, exist_ok=True)
         wanted = set(buckets_touched) if buckets_touched is not None else None
         import shutil as _shutil
@@ -1585,36 +1578,14 @@ class LakeTable:
         (added columns read as NULL from old files, dropped columns stop
         being selected, widened ints upcast in the vectorized reader).
         """
-        with commit_lock(self.root) as tok:
-            return self._evolve_locked(add_columns, widen, drop_columns,
-                                       lock_token=tok)
+        def derive(head):
+            # no bucket changed — every manifest is reused
+            return {"schema": head.schema.evolved(
+                add_columns=add_columns, widen=widen,
+                drop_columns=drop_columns, key_column=head.key_column,
+            )}, set()
 
-    def _evolve_locked(self, add_columns, widen, drop_columns=None,
-                       lock_token=None) -> Snapshot:
-        snap = self.current()
-        new_schema = snap.schema.evolved(
-            add_columns=add_columns, widen=widen,
-            drop_columns=drop_columns, key_column=snap.key_column,
-        )
-        new_snap = Snapshot(
-            version=snap.version + 1,
-            schema=new_schema,
-            key_column=snap.key_column,
-            num_buckets=snap.num_buckets,
-            files=snap.files,
-            fences=snap.fences,
-            watermark=snap.watermark,
-            min_fenced_epoch=snap.min_fenced_epoch,
-            parent=snap.version,
-            committed_at=time.time(),
-            props=snap.props,
-        )
-        # metadata-only DDL: no bucket changed — every manifest is reused
-        self._write_snapshot(new_snap, cas_parent=snap.version,
-                             lock_token=lock_token,
-                             parent_manifests=snap.manifests,
-                             dirty_buckets=set())
-        return new_snap
+        return self._publish(derive)
 
     def _write_snapshot(
         self, snap: Snapshot, cas_parent: int | None = None,

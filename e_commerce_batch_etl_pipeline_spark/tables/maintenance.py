@@ -21,8 +21,17 @@ import os
 import shutil
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
-from .format import LakeTable, Snapshot
+from .format import (
+    ConcurrentCommitError,
+    LakeTable,
+    Snapshot,
+    _attempt_dir,
+    _build_entries,
+    bucket_aligned_write,
+    commit_lock,
+)
 
 
 def compact(
@@ -38,7 +47,7 @@ def compact(
 
     At 100 TB this runs per-bucket-group as a background job; the commit
     is the same atomic pointer swap as an ingest epoch, so compaction and
-    ingest serialize through the single-writer snapshot log.
+    ingest serialize through the one snapshot publish path.
 
     ``max_buckets_per_pass`` bounds ONE pass to the N most-fragmented
     buckets (Iceberg rewrite_data_files partial-progress shape). This is
@@ -105,6 +114,7 @@ def compact(
         new_files=new_files,
         bucket_max_lsn={},
         props={"compaction": True, "buckets": len(frag)},
+        planned=snap,
         replace_files=input_paths,
     )
 
@@ -122,8 +132,6 @@ def expire_snapshots(table: LakeTable, keep_last: int = 5) -> list[int]:
     ``history()`` → ``snapshot_at()`` (remove_orphans' live-set scan)
     and must not see snapshots vanish mid-walk. Note that expiring a
     snapshot also retires it from ``changes_between`` ranges."""
-    from .format import commit_lock
-
     with commit_lock(table.root):
         versions = table.history()
         current = table.current().version
@@ -149,11 +157,8 @@ def remove_orphans(
       epoch whose writer is alive but not yet at its commit call (the
       lock alone can't see those).
     """
-    import time
-
-    from .format import commit_lock
-
     import json
+    import time
 
     removed = []
     with commit_lock(table.root):
@@ -245,66 +250,39 @@ def rebucket(
       min_fenced_epoch is kept, and full-epoch replays below it stay
       no-ops while later epochs re-run idempotently via the watermark.
     - readers never see a half-rebucketed table: one snapshot swap.
+    - an ingest epoch planned against the old layout that commits after
+      the swap is refused by the layout guard of ``LakeTable._publish``
+      and re-runs against the new layout.
 
     At 100 TB this is a background job like compaction (same commit
     CAS); run it when per-epoch touched-bucket fraction approaches 1.
     """
-    # pin the read to the SAME snapshot the version guard checks: a commit
-    # landing between two separate current() calls would spuriously fail
-    # the guard even though the rewrite read the newer state (wasted
-    # full-table rewrite)
+    # the rewrite reads `snap` and publishes with it as the planned
+    # snapshot: if ingest advanced the table since, this data is stale
+    # and the publish refuses (same retry as any CAS loser)
     snap = table.current()
     df = table.read(spark, snapshot=snap)
-    from .format import bucket_aligned_write
-
-    import uuid as _uuid
-
-    attempt = _uuid.uuid4().hex[:12]
-    rel_dir = os.path.join("data", f"commit-{attempt}")
-    out_dir = os.path.join(table.root, rel_dir)
-    from pyspark.sql import functions as F
-
+    rel_dir, out_dir = _attempt_dir(table.root)
     with bucket_aligned_write(spark):
         df.repartition(new_buckets, F.col(snap.key_column)).write.mode(
             "overwrite"
         ).parquet(out_dir)
-    from .format import _build_entries
-
     entries = _build_entries(out_dir, rel_dir, snap.key_column, None)
     min_wm = min(
         (int(v) for v in snap.watermark.values()), default=-1
     )
-    import time as _time
 
-    from .format import ConcurrentCommitError, Snapshot as _Snapshot
-    from .format import commit_lock
+    def derive(head):
+        # bucket ids change meaning: every manifest is rewritten
+        return {
+            "num_buckets": new_buckets,
+            "files": entries,
+            "fences": {},
+            "watermark": {str(b): min_wm for b in range(new_buckets)},
+            "props": {**head.props, "rebucketed_from": head.num_buckets},
+        }, None
 
-    with commit_lock(table.root) as tok:
-        # optimistic check: the rewrite read snapshot `snap` outside the
-        # lock; if ingest advanced the table since, this data is stale —
-        # refuse and let the caller retry (same loop as any CAS loser)
-        cur = table.current()
-        if cur.version != snap.version:
-            raise ConcurrentCommitError(
-                f"table advanced v{snap.version}→v{cur.version} during "
-                "rebucket rewrite; retry"
-            )
-        new_snap = _Snapshot(
-            version=cur.version + 1,
-            schema=cur.schema,
-            key_column=cur.key_column,
-            num_buckets=new_buckets,
-            files=entries,
-            fences={},
-            watermark={str(b): min_wm for b in range(new_buckets)},
-            min_fenced_epoch=cur.min_fenced_epoch,
-            parent=cur.version,
-            committed_at=_time.time(),
-            props={**cur.props, "rebucketed_from": cur.num_buckets},
-        )
-        table._write_snapshot(new_snap, cas_parent=cur.version,
-                              lock_token=tok)
-    return new_snap
+    return table._publish(derive, planned=snap, rewrite=True)
 
 
 def verify(table: LakeTable, spark: SparkSession,
@@ -320,7 +298,6 @@ def verify(table: LakeTable, spark: SparkSession,
     ``publish`` audits before moving a serving ref to it.
     """
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     snap = snapshot if snapshot is not None else table.current()
     missing = []
@@ -403,8 +380,6 @@ def publish(
     refused unless ``allow_rollback=True`` (the explicit
     rollback-serving-to-a-known-good-cut surface).
     """
-    from pyspark.sql import functions as F
-
     head = table.current().version
     target = head if version is None else int(version)
     snap_t = table.snapshot_at(target)  # raises if not retained
@@ -459,8 +434,6 @@ def publish(
     # can't interleave read-guard→tag and silently move serving
     # backwards (publisher A tags v5, B — who read the ref before A —
     # tags v4 over it)
-    from .format import ConcurrentCommitError, commit_lock
-
     with commit_lock(table.root):
         now_ref = None
         try:

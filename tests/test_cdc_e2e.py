@@ -605,3 +605,45 @@ def test_changes_between_spans_schema_evolution(spark, tmpdir_clean):
     got = {r["source"]: (r["n"], r["total"]) for r in maintained.collect()}
     want = {r["source"]: (r["n"], r["total"]) for r in recomputed.collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_epoch_racing_a_rebucket_lands_in_the_new_layout(
+        spark, tmpdir_clean, mode, monkeypatch):
+    """A rebucket that publishes between an epoch's planning and its
+    commit changes the bucket layout the epoch's files were written
+    for. The commit refuses (ConcurrentCommitError) in both modes and
+    the epoch re-runs against the new layout: no key appears twice, no
+    live file carries a bucket id of the old layout, and the final
+    state still equals the oracle."""
+    from e_commerce_batch_etl_pipeline_spark.tables import maintenance
+
+    table, wal, base = _setup(spark, tmpdir_clean)
+    eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "ckpt"),
+                    merge_mode=mode, mor_compact_files=None)
+    assert [r.status for r in eng.run(max_epochs=1)] == ["committed"]
+
+    commit = LakeTable.commit
+    raced = []
+
+    def racing_commit(self, *args, **kwargs):
+        if not raced:
+            raced.append(True)
+            maintenance.rebucket(self, spark, 8)
+        return commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "commit", racing_commit)
+    assert [r.status for r in eng.run(max_epochs=1)] == ["committed"]
+    monkeypatch.undo()
+    assert raced
+
+    snap = table.current()
+    assert snap.num_buckets == 8
+    df = table.read(spark)
+    assert df.count() == df.select("doc_id").distinct().count()
+    assert all(f["bucket"] < snap.num_buckets for f in snap.files)
+
+    assert all(r.status == "committed" for r in eng.run())
+    payload = ["tokens", "n_tok", "source"]
+    expected = _oracle_state(base, wal, spark, payload)
+    assert_states_equal(expected, _collect_state(table.read(spark), payload))

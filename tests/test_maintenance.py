@@ -235,14 +235,14 @@ def test_compaction_lost_update_guard(spark, replayed):
         ConcurrentCommitError,
     )
 
-    v0 = replayed.current().version
+    snap0 = replayed.current()
     # ingest advances the table after the (simulated) compaction read
     replayed.commit(epoch=50, replaced_buckets=[0], new_files=[],
                     bucket_max_lsn={0: 10_000}, delta=True)
     with pytest.raises(ConcurrentCommitError, match="advanced"):
         replayed.commit(
-            epoch=-(v0 + 2), replaced_buckets=[0], new_files=[],
-            bucket_max_lsn={0: 1}, expected_version=v0,
+            epoch=-(snap0.version + 2), replaced_buckets=[0], new_files=[],
+            bucket_max_lsn={0: 1}, planned=snap0,
         )
     # the retry loop re-reads and compacts the CURRENT state fine
     before = _state(spark, replayed)

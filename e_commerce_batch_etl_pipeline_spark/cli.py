@@ -200,7 +200,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="also delete orphaned data files")
     m.add_argument("--gc-min-age-sec", type=float, default=3600.0,
                    help="never GC files younger than this (in-flight "
-                        "epoch staging safety)")
+                        "epoch write safety)")
     m.add_argument("--rebucket", type=int, default=None,
                    help="rewrite the table into N hash buckets (bucket-"
                         "count evolution; atomic snapshot commit)")

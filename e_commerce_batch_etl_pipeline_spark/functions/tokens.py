@@ -38,11 +38,13 @@ def recompute_n_tok(df: DataFrame, tokens_col: str = "tokens",
     return df.withColumn(n_tok_col, col)
 
 
-def envelope_validity(vocab_size: int = VOCAB_SIZE):
+def envelope_validity(vocab_size: int = VOCAB_SIZE,
+                      key_column: str = "doc_id"):
     """Boolean Column: is this WAL envelope structurally valid?
 
     Invalid (quarantined, counted as conflicts, never applied):
-      - null doc_id, null lsn, or op null or not in {I,U,D}
+      - null key (``key_column``, the table's), null lsn, or op null or
+        not in {I,U,D}
       - I/U with null/empty tokens, or token out of [0, vocab)
       - D rows are valid regardless of payload (payload ignored)
     Never NULL: ``isin`` on a NULL op is NULL, and a NULL flag would be
@@ -51,7 +53,7 @@ def envelope_validity(vocab_size: int = VOCAB_SIZE):
     runs JVM-side).
     """
     op_ok = F.col("op").isin("I", "U", "D")
-    key_ok = F.col("doc_id").isNotNull() & F.col("lsn").isNotNull()
+    key_ok = F.col(key_column).isNotNull() & F.col("lsn").isNotNull()
     toks = F.col("tokens")
     tokens_ok = (
         toks.isNotNull()

@@ -19,7 +19,7 @@ Two physical strategies, same semantics (tested equivalent):
   (local[16]): plain max_by 0.44s vs salted 1.44s vs window row_number
   2.04s — the partial agg wins outright, and the window variant (which
   sorts the hot key's rows in one partition) is the one that melts.
-  In the engine only the merge-on-read staging path calls it, and it
+  In the engine only the merge-on-read delta write calls it, and it
   repartitions by the table key at the bucket count BEFORE this
   aggregate so dedup + bucket-pure write share one exchange; under that
   plan the hot key's raw rows do land on one reducer first, which is
@@ -33,7 +33,7 @@ Two physical strategies, same semantics (tested equivalent):
   window-function formulations); AQE's skew handling only splits skewed
   *join* partitions, never aggregation groups, so for those operators
   this is the scale path (SURVEY.md §7.4). A standalone max_by does not
-  need it, but the engine's single-exchange plans (MOR staging, the CoW
+  need it, but the engine's single-exchange plans (MOR delta write, the CoW
   merge) send a hot key's raw rows to one reducer; the engine's
   ``salted`` flag runs this first so stage 1 collapses the hot key to
   ≤ S rows before that exchange.
@@ -68,11 +68,11 @@ def lww_dedup(df: DataFrame, key="doc_id", order: str = "lsn") -> DataFrame:
     """Keep, per key, the row with max (order, op_rank). One aggregate.
 
     ``key`` may be one column name or a list (composite group key). The
-    engine's merge-on-read staging path groups by the table key over a
+    engine's merge-on-read delta write groups by the table key over a
     ``repartition(B, table_key)``: that partitioning satisfies the
     aggregate's clustering requirement, so it runs with NO exchange of
     its own while its output stays bucket-pure — one shuffle for dedup
-    + bucket-aligned staging together (guide §2.4).
+    + the bucket-aligned write together (guide §2.4).
     """
     keys = [key] if isinstance(key, str) else list(key)
 

@@ -16,7 +16,7 @@ One epoch (microbatch) flows through (SURVEY.md §3.4):
    epoch id (which no fence matches), exactly-once. The B watermarks are
    one plan-time literal indexed by the bucket expression — no join
 
-Copy-on-write (default) then runs, with nothing staged:
+Copy-on-write (default) then runs:
 
 6. **pre-pass** — one column-pruned aggregate grouped by bucket: distinct
    applied keys and max lsn per bucket (touched buckets, lineage,
@@ -36,12 +36,15 @@ Copy-on-write (default) then runs, with nothing staged:
     per-partition lineage + metrics JSON + driver checkpoint
 
 Merge-on-read instead runs LWW dedup + n_tok recompute over the rows it
-applies into ONE bucket-pure staging write (a ``df.observe`` on it
-counts rows in and conflicts), writes the same audit lane as step 7, and
-adopts the staged files as the epoch's delta files — no table rewrite.
+applies and writes them as the epoch's delta files, off ONE exchange,
+straight into the table — no table rewrite. A ``df.observe`` on the
+scan counts rows in and conflicts; the audit lane is step 7's. Both
+modes write through one engine writer (``CdcEngine._write_epoch``:
+``LakeTable.write_data_files`` behind the same DQ gate, step 9).
 
-Crash safety: a crash before publish leaves orphan written files that no
-manifest references (invisible); a crash after publish but before the
+Crash safety, the same in both modes: a crash before publish leaves
+written files under ``data/`` that no manifest references (invisible
+orphans for ``remove_orphans``); a crash after publish but before the
 driver checkpoint is healed by the (epoch, bucket) fence set — the rerun
 commits nothing twice. Resume = read checkpoint, continue from the next
 epoch (``resume`` arg / CLI).
@@ -51,9 +54,9 @@ is fenced on *our* snapshot commits, and a resumable batch loop gives
 replay/resume semantics directly (SURVEY.md §2.10). The loop body is pure
 DataFrame ops, so each epoch is a fixed handful of Spark jobs regardless
 of data size (CoW: the pre-pass collect, the merge write; MOR: the
-staging write, plus inline compaction; both: the audit write only when
-anything was quarantined) — driver orchestration cost is O(epochs), not
-O(rows).
+delta write, plus inline compaction; both: the audit write only when
+anything was quarantined, the ``strict_dq`` re-check only when asked
+for) — driver orchestration cost is O(epochs), not O(rows).
 """
 
 from __future__ import annotations
@@ -75,7 +78,7 @@ from ..operators.lww import lww_dedup, lww_dedup_salted
 from ..operators.merge import merge_upsert, merge_upsert_lww  # noqa: F401
 from ..session import expr_memo
 from ..sources.wal import WalSource
-from ..tables.format import LakeTable, _build_entries, bucket_expr
+from ..tables.format import LakeTable, bucket_expr
 
 ENVELOPE_COLS = {"lsn", "epoch", "op", "ts"}
 
@@ -85,7 +88,7 @@ def _applies(snap):
     ``lsn > <the row's bucket's committed watermark>``. Valid rows
     failing the watermark were applied by an earlier commit. Both modes
     select on this one predicate: the CoW pre-pass and merge input, and
-    the MOR staging input.
+    the MOR delta write's input.
 
     The B watermarks ride the plan as ONE JSON string literal that
     from_json parses and Catalyst folds into a single array Literal,
@@ -115,7 +118,6 @@ class EpochResult:
     epoch: int
     status: str  # "committed" | "skipped" | "empty"
     rows_in: int = 0
-    rows_valid: int = 0
     conflicts: int = 0
     rows_applied: int = 0
     buckets_touched: int = 0
@@ -144,7 +146,7 @@ class CdcEngine:
 
         - "cow" (copy-on-write, default): each epoch rewrites the touched
           buckets via one union+LWW MERGE — reads stay plain scans.
-        - "mor" (merge-on-read): each epoch ADOPTS its staged deduped
+        - "mor" (merge-on-read): each epoch writes its LWW-deduped
           change-set as per-bucket delta files (write cost O(changes),
           never O(table)); readers resolve LWW at scan time; buckets are
           compacted back to base files once they accumulate more than
@@ -162,12 +164,13 @@ class CdcEngine:
         accepted so existing callers (perfbench) keep working.
 
         ``delta_blooms``: attach a per-file key Bloom filter to every
-        MOR delta file at adoption time (tables/bloom.py). Point lookups
-        then skip the pending deltas that don't contain the probed key —
-        the deferred-compaction read tax min/max stats cannot touch
-        (random update keys span each delta's whole range). Costs one
-        extra column-pruned O(changes) pass per epoch over the staged
-        change-set; off by default so replay-throughput benchmarks are
+        MOR delta file as it is written (``write_data_files``'
+        ``collect_blooms``; tables/bloom.py). Point lookups then skip the
+        pending deltas that don't contain the probed key — the
+        deferred-compaction read tax min/max stats cannot touch (random
+        update keys span each delta's whole range). Costs one extra
+        column-pruned O(changes) pass per epoch over the written delta
+        files; off by default so replay-throughput benchmarks are
         unaffected unless asked for.
         """
         self.spark = spark
@@ -178,7 +181,10 @@ class CdcEngine:
         self.num_salts = num_salts
         self.audit_quarantine = audit_quarantine
         self.strict_dq = strict_dq
-        assert merge_mode in ("cow", "mor")
+        if merge_mode not in ("cow", "mor"):
+            raise ValueError(
+                f"merge_mode must be 'cow' or 'mor', not {merge_mode!r}"
+            )
         self.merge_mode = merge_mode
         self.mor_compact_files = mor_compact_files
         self.commit_retries = commit_retries
@@ -208,27 +214,6 @@ class CdcEngine:
         os.replace(tmp, self._ckpt_path)
 
     # ---------- per-bucket stats ----------
-
-    def _staged_stats(self, stage_dir: str, snap):
-        """``({bucket: {rows, max_lsn}}, entries)`` for a MOR epoch's
-        staged change-set.
-
-        The staged files are bucket-pure (part-0000i holds bucket i), so
-        their parquet footers carry both: ``_build_entries`` reads them
-        on the shared I/O pool, and MOR adopts those same entries. (CoW
-        stages nothing; its stats come from ``_cow_prepass``.)
-        """
-        if not os.path.isdir(stage_dir):
-            return {}, []
-        entries = _build_entries(stage_dir, "", snap.key_column, None)
-        stats = {}
-        for e in entries:
-            if "max_lsn" not in e:
-                raise RuntimeError(
-                    f"staged file {e['path']} lacks lsn statistics"
-                )
-            stats[e["bucket"]] = {"rows": e["rows"], "max_lsn": e["max_lsn"]}
-        return stats, entries
 
     def _cow_prepass(self, flagged, applies, snap):
         """``({bucket: {rows, max_lsn}}, conflicts, rows_in)`` for a CoW
@@ -286,19 +271,52 @@ class CdcEngine:
         else:
             os.makedirs(qdir, exist_ok=True)
 
-    def _check_unique_keys(self, paths: list[str], key: str,
-                           epoch: int) -> None:
-        """``strict_dq``: key uniqueness re-checked on the WRITTEN files
-        (LWW output is unique per key by construction, so this guards
-        against regressions, not data; one extra job when enabled)."""
-        nk = self.spark.read.parquet(*paths).select(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col(key)).alias("k"),
-        ).collect()[0]
-        if int(nk["n"]) != int(nk["k"]):
+    def _write_epoch(self, df, snap, epoch: int,
+                     touched: list[int] | None = None):
+        """The engine's one data-file writer, for both modes:
+        ``write_data_files`` of ``df`` at ``snap``'s layout, with the DQ
+        gate's counts riding the same job (``df.observe``), then the gate
+        itself — abort BEFORE publish, the written files stay orphans —
+        and, with ``strict_dq``, key uniqueness re-checked on the WRITTEN
+        files (LWW output is unique per key by construction, so this
+        guards against regressions, not data; one extra job). MOR delta
+        files get Bloom filters with ``delta_blooms``. Returns the file
+        entries and the written row count."""
+        key = snap.key_column
+        obs = Observation()
+        observed = df.observe(obs, *expr_memo(("engine.dq", key), lambda: (
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col("n_tok") != F.size(F.col("tokens")), 1)
+                  .otherwise(0)).alias("bad_ntok"),
+            F.sum(F.when(F.col(key).isNull(), 1).otherwise(0)).alias(
+                "null_keys"),
+        )))
+        files = self.table.write_data_files(
+            observed, touched, planned=snap,
+            collect_blooms=self.merge_mode == "mor" and self.delta_blooms,
+        )
+        m = obs.get
+        if int(m["bad_ntok"] or 0) != 0:
             raise RuntimeError(
-                f"DQ FAIL epoch {epoch}: duplicate keys in the written files"
+                f"DQ FAIL epoch {epoch}: {m['bad_ntok']} rows violate "
+                "n_tok == size(tokens) — aborting before commit"
             )
+        if int(m["null_keys"] or 0) != 0:
+            raise RuntimeError(
+                f"DQ FAIL epoch {epoch}: null keys reached the write — "
+                "aborting before commit"
+            )
+        if self.strict_dq and files:
+            nk = self.spark.read.parquet(*(
+                os.path.join(self.table.root, f["path"]) for f in files
+            )).select(
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct(F.col(key)).alias("k"),
+            ).collect()[0]
+            if int(nk["n"]) != int(nk["k"]):
+                raise RuntimeError(f"DQ FAIL epoch {epoch}: duplicate keys "
+                                   "in the written files")
+        return files, int(m["rows"])
 
     # ---------- the loop ----------
 
@@ -498,13 +516,14 @@ class CdcEngine:
         # pass over the epoch reads valid lane and audit lane off one
         # linear plan, and the conflict count rides a pass the epoch
         # runs anyway (CoW: the pre-pass aggregate; MOR: one observe on
-        # the staging write — A4 pattern, zero extra passes).
+        # the delta write — A4 pattern, zero extra passes).
         from ..functions.tokens import envelope_validity
 
+        key = snap.key_column
         flagged = raw.withColumn(
             "_q", expr_memo(
-                ("engine.validity",),
-                lambda: (~envelope_validity()).cast("int"))
+                ("engine.validity", key),
+                lambda: (~envelope_validity(key_column=key)).cast("int"))
         )
         if self.merge_mode == "cow":
             return self._apply_cow(flagged, snap, epoch, t0)
@@ -513,10 +532,10 @@ class CdcEngine:
     def _apply_cow(self, flagged, snap, epoch: int, t0: float) -> EpochResult:
         """Copy-on-write epoch: pre-pass, audit lane, then ONE merge+write.
 
-        Nothing is staged: the merge consumes the raw envelopes and
-        resolves change-vs-change and change-vs-base LWW in one
-        aggregate, so the whole epoch's data movement is one exchange of
-        base+changes and one write.
+        The merge consumes the raw (un-deduped) envelopes and resolves
+        change-vs-change and change-vs-base LWW in one aggregate, so the
+        whole epoch's data movement is one exchange of base+changes and
+        one write.
         """
         key, B = snap.key_column, snap.num_buckets
         # 5. the rows this epoch applies: valid, and above their bucket's
@@ -561,38 +580,10 @@ class CdcEngine:
             base, recompute_n_tok(changes), key=key, num_partitions=B
         )
 
-        # 9. write + DQ gate metrics in the SAME job (df.observe).
+        # 9. write + DQ gate (its counts ride the write job).
         # write_data_files' repartition(B, key) is elided: the merge
         # already partitioned on the key at B.
-        obs = Observation()
-        observed = merged.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(
-                F.when(F.col("n_tok") != F.size(F.col("tokens")), 1).otherwise(0)
-            ).alias("bad_ntok"),
-            F.sum(F.when(F.col(key).isNull(), 1).otherwise(0)).alias(
-                "null_keys"
-            ),
-        )
-        new_files = self.table.write_data_files(observed, touched)
-        m = obs.get
-
-        # DQ gate — abort BEFORE publish; written files stay orphaned
-        if int(m["bad_ntok"] or 0) != 0:
-            raise RuntimeError(
-                f"DQ FAIL epoch {epoch}: {m['bad_ntok']} rows violate "
-                "n_tok == size(tokens) — aborting before commit"
-            )
-        if int(m["null_keys"] or 0) != 0:
-            raise RuntimeError(
-                f"DQ FAIL epoch {epoch}: null keys reached merge — aborting"
-            )
-        if self.strict_dq and new_files:
-            self._check_unique_keys(
-                [os.path.join(self.table.root, f["path"]) for f in new_files],
-                key, epoch,
-            )
+        new_files, rows_out = self._write_epoch(merged, snap, epoch, touched)
 
         # 10. atomic publish + lineage + metrics (guarded on the
         # snapshot the merge read — a loser raises ConcurrentCommitError
@@ -607,16 +598,16 @@ class CdcEngine:
             planned=snap,
         )
         return self._committed(epoch, stats, rows_in, conflicts, t0,
-                               int(m["rows"]))
+                               rows_out)
 
     def _apply_mor(self, flagged, snap, epoch: int,
                    t0: float) -> EpochResult:
-        """Merge-on-read epoch: LWW + bucket-pure staging write of the
-        rows it applies, in one exchange; the staged files ARE the
-        epoch's delta files. The audit lane is a separate write, only
-        when anything was quarantined."""
+        """Merge-on-read epoch: LWW of the rows it applies, written in one
+        exchange as the epoch's delta files, straight into the table. The
+        audit lane is a separate write, only when anything was
+        quarantined."""
         key, B = snap.key_column, snap.num_buckets
-        # the input and quarantine counts ride the staging write
+        # the input and quarantine counts ride the delta write
         obs = Observation()
         changes = flagged.observe(
             obs,
@@ -629,119 +620,89 @@ class CdcEngine:
         # 6. LWW dedup — deterministic winner per key by max lsn.
         # Default plan: repartition(B, key) FIRST, then groupBy(key) — the
         # aggregate's clustering requirement is satisfied by the key
-        # partitioning, so dedup AND the bucket-pure staging write share
-        # ONE exchange (guide §2.4). Trade, priced in BASELINE.md: the
-        # single exchange moves raw rows, so a pathological hot key lands
-        # on one reducer before collapsing — the ``salted`` flag first
-        # collapses a hot key to ≤ num_salts rows (two-stage plan) for
-        # that regime. 7. n_tok recomputed (derive-if-missing/wrong).
+        # partitioning, and write_data_files' own repartition(B, key) is
+        # elided, so dedup AND the bucket-pure write share ONE exchange
+        # (guide §2.4). Trade, priced in BASELINE.md: the single exchange
+        # moves raw rows, so a pathological hot key lands on one reducer
+        # before collapsing — the ``salted`` flag first collapses a hot
+        # key to ≤ num_salts rows (two-stage plan) for that regime.
+        # 7. n_tok recomputed (derive-if-missing/wrong).
         if self.salted:
             changes = lww_dedup_salted(
                 changes, key=key, num_salts=self.num_salts
             )
-        staged = recompute_n_tok(
+        deduped = recompute_n_tok(
             lww_dedup(changes.repartition(B, F.col(key)), key=key)
         )
-        # 8. stage the deduped change-set. The repartition(B, key) makes
-        # the staged files BUCKET-PURE (partition index == bucket_expr —
-        # murmur3-aligned; file part-0000i holds exactly bucket i's
-        # rows, asserted by tests), so their parquet footers yield
-        # per-bucket stats (rows, max lsn) and adoption entries nearly
-        # for free (_staged_stats).
-        stage_dir = os.path.join(
-            self.checkpoint_dir, "stage", f"epoch-{epoch:05d}"
-        )
-        from ..tables.format import bucket_aligned_write
-
-        with bucket_aligned_write(self.spark):
-            staged.write.mode("overwrite").parquet(stage_dir)
+        # 8. write the delta files + DQ gate. Bucket-pure, so each file's
+        # footer gives its bucket's applied rows and max lsn.
+        new_files, _ = self._write_epoch(deduped, snap, epoch)
         m = obs.get
         rows_in, conflicts = int(m["rows_in"] or 0), int(m["rows_q"] or 0)
         # the audit write re-reads the WAL, not the observed plan
         self._write_audit(flagged, epoch, conflicts)
-        try:
-            # touched buckets + per-bucket max lsn + applied rows, and
-            # the entries adoption publishes
-            stats, staged_entries = self._staged_stats(stage_dir, snap)
-            if not stats:
-                return EpochResult(
-                    epoch=epoch, status="empty", rows_in=rows_in,
-                    conflicts=conflicts, duration_sec=time.time() - t0,
+        stats = {}
+        for f in new_files:
+            if "max_lsn" not in f:
+                raise RuntimeError(
+                    f"delta file {f['path']} lacks lsn statistics"
                 )
-            touched = sorted(stats)
-            bucket_max_lsn = {b: s["max_lsn"] for b, s in stats.items()}
-            rows_valid = sum(s["rows"] for s in stats.values())
-            if self.strict_dq:
-                self._check_unique_keys([stage_dir], key, epoch)
-
-            # 9. adopt the staged change-set's bucket-pure files as delta
-            # files (driver-side move; write cost O(changes), never
-            # O(table)), publish, then compact any bucket that exceeded
-            # the delta budget (read-time LWW cost bound). With
-            # ``mor_compact_files=None`` compaction is DEFERRED to the
-            # ``maintain`` entry point (background job; it commits
-            # through the same snapshot CAS so it serializes with
-            # ingest) — the production shape, where ingest never absorbs
-            # the fold (measured: a 13M-row inline fold cost one 123 s
-            # epoch in the 55M soak; see BASELINE.md).
-            if self.delta_blooms and staged_entries:
-                # per-bucket filters from the staged files (column-
-                # pruned key read, O(changes)); entries keep the
-                # bloom ref through adoption's path rewrite
-                from ..tables.bloom import attach_blooms, bucket_blooms
-
-                blooms = bucket_blooms(
-                    self.spark.read.parquet(stage_dir), key, B,
-                )
-                staged_entries = attach_blooms(
-                    self.table.root, staged_entries, blooms
-                )
-            new_files = self.table.adopt_delta_files(
-                stage_dir, touched, key_column=key,
-                entries=staged_entries,
+            stats[f["bucket"]] = {"rows": f["rows"], "max_lsn": f["max_lsn"]}
+        if not stats:
+            return EpochResult(
+                epoch=epoch, status="empty", rows_in=rows_in,
+                conflicts=conflicts, duration_sec=time.time() - t0,
             )
-            landed = self.table.commit(
-                epoch=epoch,
-                replaced_buckets=touched,
-                new_files=new_files,
-                bucket_max_lsn=bucket_max_lsn,
-                rows_applied=rows_valid,
-                props={"epoch": epoch, "mode": "mor"},
-                delta=True,
-                # staged bucket-pure at this snapshot's bucket count: a
-                # rebucket since then refuses the commit, and the epoch
-                # re-runs against the new layout
-                planned=snap,
-            )
-            if landed is None:
-                # fence no-op: a concurrent engine committed this
-                # epoch between our fence check and our commit. The
-                # table is exactly-once either way (our adopted
-                # files are unreferenced orphans for GC); report
-                # "skipped" so run summaries and lineage don't
-                # double-count the winner's rows.
-                return EpochResult(
-                    epoch=epoch, status="skipped",
-                    rows_in=rows_in, conflicts=conflicts,
-                    buckets_touched=len(touched),
-                    duration_sec=time.time() - t0,
-                )
-            if self.mor_compact_files is not None:
-                from ..tables.format import ConcurrentCommitError
-                from ..tables.maintenance import compact
+        touched = sorted(stats)
+        rows_applied = sum(s["rows"] for s in stats.values())
 
-                try:
-                    compact(self.table, self.spark,
-                            max_files_per_bucket=self.mor_compact_files)
-                except ConcurrentCommitError:
-                    # another writer/compactor folded the same inputs;
-                    # the epoch itself IS committed — don't let the
-                    # epoch retry loop re-run it over a lost fold
-                    pass
-            return self._committed(epoch, stats, rows_in, conflicts, t0,
-                                   rows_valid)
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
+        # 9. publish the delta files, then compact any bucket that
+        # exceeded the delta budget (read-time LWW cost bound). With
+        # ``mor_compact_files=None`` compaction is DEFERRED to the
+        # ``maintain`` entry point (background job; it commits through
+        # the same snapshot CAS so it serializes with ingest) — the
+        # production shape, where ingest never absorbs the fold
+        # (measured: a 13M-row inline fold cost one 123 s epoch in the
+        # 55M soak; see BASELINE.md).
+        landed = self.table.commit(
+            epoch=epoch,
+            replaced_buckets=touched,
+            new_files=new_files,
+            bucket_max_lsn={b: s["max_lsn"] for b, s in stats.items()},
+            rows_applied=rows_applied,
+            props={"epoch": epoch, "mode": "mor"},
+            delta=True,
+            # written bucket-pure at this snapshot's bucket count: a
+            # rebucket since then refuses the commit, and the epoch
+            # re-runs against the new layout
+            planned=snap,
+        )
+        if landed is None:
+            # fence no-op: a concurrent engine committed this epoch
+            # between our fence check and our commit. The table is
+            # exactly-once either way (our files are unreferenced
+            # orphans for GC); report "skipped" so run summaries and
+            # lineage don't double-count the winner's rows.
+            return EpochResult(
+                epoch=epoch, status="skipped",
+                rows_in=rows_in, conflicts=conflicts,
+                buckets_touched=len(touched),
+                duration_sec=time.time() - t0,
+            )
+        if self.mor_compact_files is not None:
+            from ..tables.format import ConcurrentCommitError
+            from ..tables.maintenance import compact
+
+            try:
+                compact(self.table, self.spark,
+                        max_files_per_bucket=self.mor_compact_files)
+            except ConcurrentCommitError:
+                # another writer/compactor folded the same inputs; the
+                # epoch itself IS committed — don't let the epoch retry
+                # loop re-run it over a lost fold
+                pass
+        return self._committed(epoch, stats, rows_in, conflicts, t0,
+                               rows_applied)
 
     def _committed(self, epoch, stats, rows_in, conflicts, t0,
                    table_rows) -> EpochResult:
@@ -762,7 +723,6 @@ class CdcEngine:
             epoch=epoch,
             status="committed",
             rows_in=rows_in,
-            rows_valid=rows_valid,
             conflicts=conflicts,
             rows_applied=rows_valid,
             buckets_touched=len(stats),

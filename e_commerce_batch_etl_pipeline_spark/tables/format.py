@@ -39,6 +39,7 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import shutil
 import threading
 import time
 import uuid
@@ -382,9 +383,9 @@ def _build_entries(
     """File entries (with footer stats) for every non-empty bucket-pure
     ``part-0000i-*`` file in ``src_dir``. Footer opens run on a thread
     pool (I/O-bound, GIL released inside pyarrow) so a 4096-bucket
-    commit's entry build is not 4096 SERIAL driver reads. The engine's
-    staged-stats footer path reads its per-bucket rows and max lsn from
-    these entries too (streaming/microbatch.py::CdcEngine._staged_stats)."""
+    commit's entry build is not 4096 SERIAL driver reads. A merge-on-read
+    epoch reads its per-bucket rows and max lsn from these entries
+    (``write_data_files`` returns them)."""
     cands = []
     for fn in sorted(os.listdir(src_dir)):
         if not fn.endswith(".parquet"):
@@ -623,7 +624,7 @@ def bucket_aligned_write(spark):
     subtree, and any ``df.observe`` (CollectMetrics) under it, with an
     empty relation, so ``Observation.get`` finds no metrics row and
     fails. A merge-on-read epoch whose rows are all quarantined or
-    below the watermark stages an empty shuffle and still reads its
+    below the watermark writes an empty shuffle and still reads its
     counts from an observe. The rule is appended to any existing
     exclusions and the previous value is restored on exit.
     """
@@ -1230,7 +1231,7 @@ class LakeTable:
           every row of the FROM state in read-time LWW. The soundness
           rests on a commit invariant, not on failing closed: between
           rebuckets, ``watermark[b]`` is monotone and ≥ every delta-row
-          lsn in bucket b's files (commit sets it to the adopted delta's
+          lsn in bucket b's files (commit sets it to the written delta's
           max lsn), and a rebucket that RESETS watermarks also folds
           every delta into base files (which read as lsn=-1) — so no
           FROM state can hold a delta row above its own watermark, and
@@ -1305,19 +1306,30 @@ class LakeTable:
         sort_by_key: bool = False,
         max_records_per_file: int | None = None,
         collect_blooms: bool = False,
+        planned: Snapshot | None = None,
     ) -> list[dict]:
-        """Stage bucket-pure data files; returns file entries.
+        """Write bucket-pure data files; returns their file entries.
+
+        The one writer of files a snapshot references: ingest epochs in
+        both modes, compaction, rebucket and bootstrap all write here.
+        ``planned``: the snapshot whose layout (bucket count, key column)
+        the files are written for, the one the caller then passes to
+        ``commit(planned=)``; ``None`` reads the head. A rebucket passes
+        its target layout (``dataclasses.replace(snap, num_buckets=N)``).
 
         ``df.repartition(B, key)`` uses Spark's HashPartitioning, whose
         partition index equals ``bucket_expr`` by construction — so a flat
         write yields exactly one bucket-pure file per non-empty bucket
         (file ``part-0000i-*`` ↔ bucket *i*), with no partitionBy
-        dynamic-partition pass and no second shuffle (an upstream join
-        already hash-partitioned on the key at B partitions is elided).
-        This is the reference's file-count control (``src/load.py:34-41``)
-        upgraded into the commit protocol. One output dir per commit
-        attempt (``_attempt_dir``). Buckets that end up empty (all rows
-        deleted) produce no file and drop out.
+        dynamic-partition pass and no second shuffle (an upstream join or
+        aggregate already hash-partitioned on the key at B partitions is
+        elided). This is the reference's file-count control
+        (``src/load.py:34-41``) upgraded into the commit protocol. One
+        fresh output dir per attempt (``_attempt_dir``), in the table: the
+        files go live only when a commit references them, and a dead
+        attempt is an orphan for ``remove_orphans``. Buckets that end up
+        empty (all rows deleted) produce no file and drop out; when no
+        file survives, the attempt dir is removed.
 
         ``sort_by_key`` + ``max_records_per_file`` produce SORTED,
         SIZE-SPLIT buckets (Iceberg sort-order compaction): several files
@@ -1326,7 +1338,7 @@ class LakeTable:
         them a bucket's single fold file spans the bucket's whole
         (hash-scattered) key range and can never be pruned by key.
         """
-        snap = self.current()
+        snap = planned if planned is not None else self.current()
         rel_dir, out_dir = _attempt_dir(self.root)
         out = df.drop("_bucket").repartition(
             snap.num_buckets, F.col(snap.key_column)
@@ -1351,7 +1363,9 @@ class LakeTable:
         wanted = set(buckets_touched) if buckets_touched is not None else None
         # empty partitions (bucket has no data) drop out inside
         entries = _build_entries(out_dir, rel_dir, snap.key_column, wanted)
-        if collect_blooms and entries:
+        if not entries:
+            shutil.rmtree(out_dir, ignore_errors=True)
+        elif collect_blooms:
             # per-bucket Bloom filters from the WRITTEN files (a column-
             # pruned key scan — never re-executes the caller's plan). For
             # size-split buckets the per-bucket filter attaches to every
@@ -1479,7 +1493,7 @@ class LakeTable:
         Under ``commit_lock`` it re-reads the head and guards the
         snapshot the caller planned against (``planned``; None skips the
         guards, for callers that plan under the lock): the head must have
-        the planned bucket layout, since files staged bucket-pure for
+        the planned bucket layout, since files written bucket-pure for
         another bucket count carry the wrong bucket ids; and a
         ``rewrite`` of prior state needs the planned version itself,
         since publishing over a later head would drop what landed since
@@ -1528,26 +1542,19 @@ class LakeTable:
         key_column: str | None = None,
         entries: list[dict] | None = None,
     ) -> list[dict]:
-        """Adopt bucket-pure staged files as delta files (merge-on-read).
+        """Move bucket-pure files written outside the table (``stage_dir``)
+        into a fresh attempt dir, as delta files for a merge-on-read
+        commit. The engine no longer calls it: its epochs write into the
+        table through ``write_data_files``.
 
-        The engine's staged dedup output IS the delta content (bucket-pure
-        via the aligned repartition, carries op+lsn) — adopting it is a
-        driver-side file move, so a MOR epoch writes the data exactly
-        once: O(changes), never O(table).
-
-        ``key_column`` / ``entries`` let a caller that already knows them
-        skip redundant per-epoch metadata I/O: without ``key_column`` this
-        method loads the whole current snapshot (O(buckets) manifest
-        parses) just to learn the immutable key column, and without
-        ``entries`` it re-opens every staged footer a stats pass may have
-        just read. Precomputed ``entries`` keep their stats; only their
-        ``path`` is rewritten into this commit's directory.
+        ``key_column`` / ``entries`` skip the head read and the footer
+        opens when the caller already has them; precomputed ``entries``
+        keep their stats, only their ``path`` is rewritten into the
+        attempt dir.
         """
         rel_dir, out_dir = _attempt_dir(self.root)
         os.makedirs(out_dir, exist_ok=True)
         wanted = set(buckets_touched) if buckets_touched is not None else None
-        import shutil as _shutil
-
         if entries is None:
             if key_column is None:
                 key_column = self.current().key_column
@@ -1561,7 +1568,7 @@ class LakeTable:
             ]
         for e in entries:
             fn = os.path.basename(e["path"])
-            _shutil.move(
+            shutil.move(
                 os.path.join(stage_dir, fn), os.path.join(out_dir, fn)
             )
         return entries

@@ -17,21 +17,14 @@ here, in Iceberg's shape:
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .format import (
-    ConcurrentCommitError,
-    LakeTable,
-    Snapshot,
-    _attempt_dir,
-    _build_entries,
-    bucket_aligned_write,
-    commit_lock,
-)
+from .format import ConcurrentCommitError, LakeTable, Snapshot, commit_lock
 
 
 def compact(
@@ -147,15 +140,25 @@ def expire_snapshots(table: LakeTable, keep_last: int = 5) -> list[int]:
 def remove_orphans(
     table: LakeTable, min_age_sec: float = 3600.0
 ) -> list[str]:
-    """Delete data files/dirs no retained snapshot references.
+    """Delete data files/dirs no retained snapshot references; returns
+    the removed paths relative to the table root (a dead attempt dir is
+    one entry).
 
-    Concurrency safety (an in-flight epoch stages files BEFORE its commit
+    A ``data/commit-<attempt>`` dir none of whose files a retained
+    snapshot references is removed whole once every path under it is
+    old enough: that covers a published-then-expired commit, an attempt
+    killed mid-write (only Spark's ``_temporary/`` tree left) and one
+    that wrote nothing (only ``_SUCCESS``). Ages are checked over the
+    whole tree, since nested writes do not touch the parent dir's mtime.
+    In a dir that is still partly live, only the dead data files go.
+
+    Concurrency safety (an in-flight epoch writes files BEFORE its commit
     publishes them, so "unreferenced" is not "orphaned"):
     - holds the commit lock while computing the live set and deleting, so
       no commit can publish between the scan and the rm;
-    - skips anything younger than ``min_age_sec`` — staged files of an
-      epoch whose writer is alive but not yet at its commit call (the
-      lock alone can't see those).
+    - skips anything younger than ``min_age_sec`` — files of an epoch
+      whose writer is alive but not yet at its commit call (the lock
+      alone can't see those).
     """
     import json
     import time
@@ -179,6 +182,7 @@ def remove_orphans(
                 f["bloom"]["path"] for f in snap.files if "bloom" in f
             )
             live_manifests.update((raw.get("manifests") or {}).values())
+        live_dirs = {os.path.dirname(p) for p in live}
         data_root = os.path.join(table.root, "data")
         now = time.time()
 
@@ -188,24 +192,26 @@ def remove_orphans(
             except OSError:
                 return False  # vanished → another actor owns it; skip
 
+        def _tree_old_enough(top: str) -> bool:
+            return _old_enough(top) and all(
+                _old_enough(os.path.join(d, n))
+                for d, dirs, files in os.walk(top) for n in dirs + files
+            )
+
         for commit_dir in sorted(os.listdir(data_root)):
             cdir = os.path.join(data_root, commit_dir)
+            rel_dir = os.path.join("data", commit_dir)
             if not os.path.isdir(cdir):
                 continue
-            rels = [
-                os.path.join("data", commit_dir, fn)
-                for fn in os.listdir(cdir)
-                if fn.endswith(".parquet")
-            ]
-            dead = [
-                r for r in rels
-                if r not in live and _old_enough(os.path.join(table.root, r))
-            ]
-            if rels and len(dead) == len(rels) and _old_enough(cdir):
-                shutil.rmtree(cdir)
-                removed.extend(rels)
-            else:
-                for r in dead:
+            if rel_dir not in live_dirs:
+                if _tree_old_enough(cdir):
+                    shutil.rmtree(cdir)
+                    removed.append(rel_dir)
+                continue
+            for fn in os.listdir(cdir):
+                r = os.path.join(rel_dir, fn)
+                if (fn.endswith(".parquet") and r not in live
+                        and _old_enough(os.path.join(table.root, r))):
                     os.remove(os.path.join(table.root, r))
                     removed.append(r)
         # manifest files no retained snapshot references (expired history
@@ -261,13 +267,10 @@ def rebucket(
     # snapshot: if ingest advanced the table since, this data is stale
     # and the publish refuses (same retry as any CAS loser)
     snap = table.current()
-    df = table.read(spark, snapshot=snap)
-    rel_dir, out_dir = _attempt_dir(table.root)
-    with bucket_aligned_write(spark):
-        df.repartition(new_buckets, F.col(snap.key_column)).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
-    entries = _build_entries(out_dir, rel_dir, snap.key_column, None)
+    entries = table.write_data_files(
+        table.read(spark, snapshot=snap),
+        planned=dataclasses.replace(snap, num_buckets=new_buckets),
+    )
     min_wm = min(
         (int(v) for v in snap.watermark.values()), default=-1
     )

@@ -106,23 +106,26 @@ def test_epoch_with_nothing_to_apply_is_empty(spark, tmpdir_clean, mode):
     """An epoch that applies no row ends ``empty`` and commits nothing,
     in both modes: a zero-row batch, and (audit lane off) epoch 0
     re-applied under a new epoch id, whose rows the watermark drops. In
-    merge-on-read both stage an empty shuffle, whose observed counts
-    must still arrive."""
+    merge-on-read both write an empty shuffle, whose observed counts
+    must still arrive, and leave no attempt directory under ``data/``."""
     table, wal, base = _setup(spark, tmpdir_clean)
     eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "ckpt"),
                     merge_mode=mode, audit_quarantine=False)
-    v = table.current().version
+    data = os.path.join(table.root, "data")
+    v, dirs = table.current().version, set(os.listdir(data))
     env0 = wal.read_epoch(spark, 0)
     res = eng.apply_changes_df(spark.createDataFrame([], env0.schema),
                                epoch=EPOCHS + 10)
     assert (res.status, res.rows_in, res.rows_applied) == ("empty", 0, 0)
     assert table.current().version == v
+    assert set(os.listdir(data)) == dirs
     eng.run()
-    v = table.current().version
+    v, dirs = table.current().version, set(os.listdir(data))
     res = eng.apply_changes_df(env0, epoch=EPOCHS + 11)
     assert (res.status, res.rows_in, res.rows_applied) == (
         "empty", env0.count(), 0)
     assert table.current().version == v
+    assert set(os.listdir(data)) == dirs
 
 
 def test_replay_idempotent(spark, tmpdir_clean):
@@ -259,6 +262,125 @@ def test_dq_gate_aborts_before_commit(spark, tmpdir_clean, monkeypatch):
     assert_states_equal(
         state0, _collect_state(table.read(spark), ["tokens", "n_tok", "source"])
     )
+
+
+def test_mor_dq_gate_aborts_before_commit(spark, tmpdir_clean, monkeypatch):
+    """Merge-on-read epochs pass the same DQ gate as copy-on-write: a
+    broken n_tok recompute aborts the epoch before publish."""
+    table, wal, base = _setup(spark, tmpdir_clean)
+    eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "ckpt"),
+                    merge_mode="mor")
+    v0 = table.current().version
+    state0 = _collect_state(table.read(spark), ["tokens", "n_tok", "source"])
+    import e_commerce_batch_etl_pipeline_spark.streaming.microbatch as mb
+
+    monkeypatch.setattr(
+        mb, "recompute_n_tok",
+        lambda df: df.withColumn("n_tok", F.lit(1).cast("int")),
+    )
+    with pytest.raises(RuntimeError, match="DQ FAIL"):
+        eng.apply_epoch(0)
+    assert table.current().version == v0
+    assert_states_equal(
+        state0, _collect_state(table.read(spark), ["tokens", "n_tok", "source"])
+    )
+
+
+def test_mor_commit_failure_resumes_and_gc_drops_dead_attempt(
+        spark, tmpdir_clean, monkeypatch):
+    """A merge-on-read epoch whose commit fails after its files are
+    written leaves one unreferenced attempt directory under ``data/``:
+    a fresh engine resumes to the oracle state, and orphan GC removes
+    exactly that directory."""
+    from e_commerce_batch_etl_pipeline_spark.tables.maintenance import (
+        remove_orphans,
+    )
+
+    table, wal, base = _setup(spark, tmpdir_clean)
+    ckpt = os.path.join(tmpdir_clean, "ckpt")
+    data = os.path.join(table.root, "data")
+    v0, dirs0 = table.current().version, set(os.listdir(data))
+    commit = LakeTable.commit
+    calls = []
+
+    def failing_commit(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise OSError("injected: commit failed after the write")
+        return commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "commit", failing_commit)
+    with pytest.raises(OSError, match="injected"):
+        CdcEngine(spark, table, wal, ckpt, merge_mode="mor",
+                  mor_compact_files=None).run()
+    dead = set(os.listdir(data)) - dirs0
+    assert len(dead) == 1 and table.current().version == v0
+    res = CdcEngine(spark, LakeTable(table.root), wal, ckpt,
+                    merge_mode="mor", mor_compact_files=None).run()
+    assert [r.status for r in res] == ["committed"] * EPOCHS
+    payload = ["tokens", "n_tok", "source"]
+    expected = _oracle_state(base, wal, spark, payload)
+    assert_states_equal(expected, _collect_state(table.read(spark), payload))
+    dirs = set(os.listdir(data))
+    assert remove_orphans(table, min_age_sec=0) == [
+        os.path.join("data", d) for d in dead]
+    assert set(os.listdir(data)) == dirs - dead
+    assert_states_equal(expected, _collect_state(table.read(spark), payload))
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_replay_into_table_keyed_on_id(spark, tmpdir_clean, mode):
+    """The engine validates envelopes on the table's key column, not on
+    a fixed ``doc_id``: hand-built envelopes replay into a 4-bucket table
+    keyed on ``id`` to the expected state, and an envelope with a null
+    ``id`` is quarantined."""
+    from e_commerce_batch_etl_pipeline_spark.tables.format import TableSchema
+
+    schema = TableSchema(fields=[
+        ("id", "string", False),
+        ("tokens", "array<int>", True),
+        ("n_tok", "int", True),
+    ])
+    base = spark.createDataFrame(
+        [(f"k{i}", [i, i + 1], 2) for i in range(8)],
+        "id string, tokens array<int>, n_tok int",
+    )
+    table = bootstrap_table(os.path.join(tmpdir_clean, "table"), base,
+                            schema=schema, key_column="id", num_buckets=4)
+    env = "lsn long, op string, id string, tokens array<int>, n_tok int"
+    wal_root = os.path.join(tmpdir_clean, "wal")
+    epochs = [
+        [(1, "U", "k0", [7], None), (2, "D", "k1", None, None),
+         (3, "I", "k9", [1, 2, 3], None), (4, "U", "k0", [8, 9], None),
+         (5, "I", None, [5], None)],
+        [(6, "D", "k9", None, None), (7, "U", "k2", [4, 4, 4, 4], 1),
+         (8, "I", "k10", [0], None)],
+    ]
+    for e, rows in enumerate(epochs):
+        spark.createDataFrame(rows, env).select(
+            "lsn", F.lit(e).alias("epoch"), "op", "id", "tokens", "n_tok",
+            F.lit(None).cast("timestamp").alias("ts"),
+        ).write.parquet(os.path.join(wal_root, f"epoch-{e:05d}"))
+    res = CdcEngine(spark, table, WalSource(wal_root),
+                    os.path.join(tmpdir_clean, "ckpt"),
+                    merge_mode=mode).run()
+    assert [r.status for r in res] == ["committed", "committed"]
+    assert [r.conflicts for r in res] == [1, 0]
+    want = {f"k{i}": ([i, i + 1], 2) for i in range(3, 8)}
+    want.update({"k0": ([8, 9], 2), "k2": ([4, 4, 4, 4], 4),
+                 "k10": ([0], 1)})
+    got = {r["id"]: (list(r["tokens"]), r["n_tok"])
+           for r in table.read(spark).collect()}
+    assert got == want
+
+
+def test_unknown_merge_mode_is_rejected(spark, tmpdir_clean):
+    """Any merge_mode but "cow" or "mor" raises, also under ``python -O``
+    (an assert would be stripped and the engine would silently run
+    merge-on-read)."""
+    with pytest.raises(ValueError, match="merge_mode"):
+        CdcEngine(spark, None, None, os.path.join(tmpdir_clean, "ckpt"),
+                  merge_mode="merge-on-read")
 
 
 def test_old_schema_producer_after_evolution(spark, tmpdir_clean):

@@ -67,6 +67,36 @@ def test_expire_and_orphan_gc(spark, replayed):
         assert os.path.exists(os.path.join(replayed.root, f["path"]))
 
 
+def test_orphan_gc_removes_dead_attempts_without_data_files(
+        spark, replayed):
+    """An attempt killed mid-write (only Spark's ``_temporary/`` tree
+    left) and one that wrote nothing (only ``_SUCCESS``) are orphans
+    once every path under them is old enough; a young ``_temporary``
+    tree (a write still in flight) survives."""
+    data = os.path.join(replayed.root, "data")
+    before = _state(spark, replayed)
+    nested = os.path.join("_temporary", "0", "_temporary", "attempt_0",
+                          "part-00000-x.c000.snappy.parquet")
+    shapes = {"commit-deadwrite": nested, "commit-deadempty": "_SUCCESS",
+              "commit-inflight": nested}
+    for name, rel in shapes.items():
+        path = os.path.join(data, name, rel)
+        os.makedirs(os.path.dirname(path))
+        open(path, "wb").close()
+    for name in ("commit-deadwrite", "commit-deadempty"):
+        for d, dirs, files in os.walk(os.path.join(data, name)):
+            for n in dirs + files:
+                os.utime(os.path.join(d, n), (1, 1))
+        os.utime(os.path.join(data, name), (1, 1))
+    removed = remove_orphans(replayed, min_age_sec=600)
+    assert sorted(removed) == [os.path.join("data", "commit-deadempty"),
+                               os.path.join("data", "commit-deadwrite")]
+    assert os.path.exists(os.path.join(data, "commit-inflight", nested))
+    assert not os.path.exists(os.path.join(data, "commit-deadwrite"))
+    assert not os.path.exists(os.path.join(data, "commit-deadempty"))
+    assert _state(spark, replayed) == before
+
+
 def test_write_verify(spark, replayed):
     from e_commerce_batch_etl_pipeline_spark.tables.maintenance import verify
 

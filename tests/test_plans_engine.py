@@ -258,38 +258,43 @@ def test_cow_epoch_stages_nothing_and_merges_off_one_exchange(
 
 def test_mor_epoch_stages_applied_rows_off_one_exchange(
         spark, tmp_path, monkeypatch):
-    """A merge-on-read epoch stages only the rows it applies: the
-    staging write is planned off ONE hash exchange on the key, its LWW
+    """A merge-on-read epoch writes only the rows it applies, straight
+    into the table through ``write_data_files`` (no ``<ckpt>/stage/``):
+    the write is planned off ONE hash exchange on the key, its LWW
     aggregate is keyed by the key alone (no per-row quarantine salt),
-    and the stage directory holds no ``_q=`` split, although the WAL
+    and the attempt directory holds no ``_q=`` split, although the WAL
     carries quarantined rows."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
     from e_commerce_batch_etl_pipeline_spark.sources.datagen import write_wal
     from e_commerce_batch_etl_pipeline_spark.sources.wal import WalSource
     from e_commerce_batch_etl_pipeline_spark.streaming.microbatch import (
         CdcEngine,
     )
+    from e_commerce_batch_etl_pipeline_spark.tables.format import LakeTable
 
     root = str(tmp_path)
     base = generate_base_docs(spark, 400, seed=7, max_len=16)
     table = bootstrap_table(os.path.join(root, "t"), base, num_buckets=4)
     write_wal(spark, os.path.join(root, "wal"), 2, 200, 400, seed=7,
               max_len=16, invalid_frac=0.1)
+    ckpt = os.path.join(root, "ckpt")
     staged = []
-    parquet = DataFrameWriter.parquet
+    write = LakeTable.write_data_files
 
-    def spy(self, path, *args, **kwargs):
-        out = parquet(self, path, *args, **kwargs)
-        if os.sep + "stage" + os.sep in path:
-            staged.append((physical_plan(self._df), os.listdir(path)))
-        return out
+    def spy(self, df, *args, **kwargs):
+        # the frame write_data_files writes: its repartition(B, key)
+        plan = physical_plan(df.repartition(4, F.col("doc_id")))
+        files = write(self, df, *args, **kwargs)
+        attempt = os.path.join(self.root, os.path.dirname(files[0]["path"]))
+        staged.append((plan, os.listdir(attempt)))
+        assert not os.path.exists(os.path.join(ckpt, "stage"))
+        return files
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    monkeypatch.setattr(LakeTable, "write_data_files", spy)
     res = CdcEngine(spark, table, WalSource(os.path.join(root, "wal")),
-                    os.path.join(root, "ckpt"), merge_mode="mor").run()
+                    ckpt, merge_mode="mor").run()
     assert [r.status for r in res] == ["committed", "committed"]
     assert all(r.conflicts > 0 for r in res)
+    assert not os.path.exists(os.path.join(ckpt, "stage"))
     assert len(staged) == 2
     for plan, listing in staged:
         tree = plan.split("\n\n")[0]  # the operator tree, not details
@@ -298,4 +303,5 @@ def test_mor_epoch_stages_applied_rows_off_one_exchange(
         assert "xxhash64" not in plan, plan
         keys = re.findall(r"Keys \[\d+\]: \[([^\]]*)\]", plan)
         assert keys and all(re.fullmatch(r"doc_id#\d+", k) for k in keys), plan
+        assert "BroadcastExchange" not in plan, plan
         assert not [f for f in listing if f.startswith("_q=")], listing

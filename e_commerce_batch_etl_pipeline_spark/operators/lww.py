@@ -69,10 +69,11 @@ def lww_dedup(df: DataFrame, key="doc_id", order: str = "lsn") -> DataFrame:
 
     ``key`` may be one column name or a list (composite group key). The
     engine's merge-on-read delta write groups by the table key over a
-    ``repartition(B, table_key)``: that partitioning satisfies the
-    aggregate's clustering requirement, so it runs with NO exchange of
-    its own while its output stays bucket-pure — one shuffle for dedup
-    + the bucket-aligned write together (guide §2.4).
+    ``repartition(P, table_key)`` at the writer's width P
+    (``write_partitions``): that partitioning satisfies the aggregate's
+    clustering requirement, so it runs with NO exchange of its own and
+    the bucket-pure writer's repartition is elided — one shuffle for
+    dedup + the write together (guide §2.4).
     """
     keys = [key] if isinstance(key, str) else list(key)
 

@@ -103,9 +103,10 @@ def merge_upsert_lww(
     property-tested in tests/test_properties.py).
 
     Grouped by the key, the aggregate's required clustering is satisfied
-    by the ``repartition(num_partitions, key)`` below; at the table's
-    bucket count that also elides the bucket-pure writer's repartition,
-    so the merge and the write run off a SINGLE exchange of
+    by the ``repartition(num_partitions, key)`` below; at the writer's
+    width (``write_partitions(spark, B)``, a divisor of the bucket count
+    that fits one task wave) that also elides the bucket-pure writer's
+    repartition, so the merge and the write run off a SINGLE exchange of
     base+changes — no shuffled anti join exchanging base and change-keys
     before the write's own exchange, and no driver-side broadcast build
     (guide §2.4 "remove shuffles outright"). The aggregate plans as a
@@ -121,10 +122,10 @@ def merge_upsert_lww(
     ch_side = ch_side.select(*out_cols, "op", "lsn", F.lit(1).alias("_src"))
     unioned = base_side.unionByName(ch_side)
     if num_partitions is not None:
-        # hash-partition by the key at the TABLE's bucket count so the
-        # groupBy below needs no exchange of its own and the bucket-pure
-        # writer's repartition is elided — the whole merge+write is ONE
-        # exchange of base+changes
+        # hash-partition by the key at the writer's width so the groupBy
+        # below needs no exchange of its own and the bucket-pure writer's
+        # repartition is elided — the whole merge+write is ONE exchange
+        # of base+changes
         unioned = unioned.repartition(num_partitions, F.col(key))
     payload = [c for c in out_cols if c != key] + ["op"]
     order = F.struct(

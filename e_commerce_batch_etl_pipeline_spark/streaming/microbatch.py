@@ -3,7 +3,8 @@
 One epoch (microbatch) flows through (SURVEY.md §3.4):
 
 1. **fence check** — epoch already committed? → no-op (idempotent replay)
-2. **scan** the epoch's WAL segment (incremental; only new segments read)
+2. **scan** the epoch's WAL segment (incremental; only new segments
+   read) at the schema of one footer — no inference job
 3. **schema evolution** — new nullable envelope columns → metadata-only
    DDL on the table before any data moves
 4. **validate** envelopes (Catalyst predicates); invalid → quarantine +
@@ -18,17 +19,18 @@ One epoch (microbatch) flows through (SURVEY.md §3.4):
 
 Copy-on-write (default) then runs:
 
-6. **pre-pass** — one column-pruned aggregate grouped by bucket: distinct
-   applied keys and max lsn per bucket (touched buckets, lineage,
-   watermarks) and the quarantined count
+6. **pre-pass** — one column-pruned pass off one exchange on the
+   bucket: distinct applied keys and max lsn per bucket (touched
+   buckets, lineage, watermarks) and the quarantined count
 7. **audit lane** — quarantined envelopes written verbatim to
    ``<ckpt>/quarantine/epoch-N`` (only when there are any)
 8. **MERGE** into only the touched buckets — ``merge_upsert_lww`` over
    the base and the UN-deduped valid envelopes (n_tok recomputed, the
    ``salted`` flag pre-collapses hot keys): LWW among changes and
    against the base in one aggregate, off ONE key exchange of
-   base+changes that the bucket-pure write reuses; untouched buckets'
-   files survive untouched
+   base+changes at the writer's width P (``write_partitions``: one task
+   wave) that the bucket-pure write reuses; untouched buckets' files
+   survive untouched
 9. **DQ gate** via ``df.observe`` on that same write job — zero extra
    passes; FAIL → abort *before* publish (reference: orchestrator DQ
    gate, ``notebooks/07_pipeline_orchestrator.py:250-252``)
@@ -53,10 +55,13 @@ Why a driver epoch loop and not Structured Streaming: exactly-once here
 is fenced on *our* snapshot commits, and a resumable batch loop gives
 replay/resume semantics directly (SURVEY.md §2.10). The loop body is pure
 DataFrame ops, so each epoch is a fixed handful of Spark jobs regardless
-of data size (CoW: the pre-pass collect, the merge write; MOR: the
-delta write, plus inline compaction; both: the audit write only when
-anything was quarantined, the ``strict_dq`` re-check only when asked
-for) — driver orchestration cost is O(epochs), not O(rows).
+of data size — driver orchestration cost is O(epochs), not O(rows). An
+epoch that quarantines rows runs 5 jobs in CoW (the pre-pass's shuffle
+map stage and collect, the audit write, the merge's shuffle map stage
+and the write) and 3 in MOR (the LWW's shuffle map stage, the delta
+write, the audit write), plus inline compaction when it runs. Reading
+the WAL segment runs none; the audit write runs only when anything was
+quarantined, the ``strict_dq`` re-check only when asked for.
 """
 
 from __future__ import annotations
@@ -64,6 +69,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import sys
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -78,7 +84,7 @@ from ..operators.lww import lww_dedup, lww_dedup_salted
 from ..operators.merge import merge_upsert, merge_upsert_lww  # noqa: F401
 from ..session import expr_memo
 from ..sources.wal import WalSource
-from ..tables.format import LakeTable, bucket_expr
+from ..tables.format import LakeTable, bucket_expr, write_partitions
 
 ENVELOPE_COLS = {"lsn", "epoch", "op", "ts"}
 
@@ -217,31 +223,50 @@ class CdcEngine:
 
     def _cow_prepass(self, flagged, applies, snap):
         """``({bucket: {rows, max_lsn}}, conflicts, rows_in)`` for a CoW
-        epoch from ONE column-pruned aggregate over the flagged
-        envelopes, grouped by the bucket expression (B small rows
-        collected; no driver footer opens, so flat in the bucket
-        count). Spark plans the
-        distinct count as HashAggregates over two small exchanges, on
-        (bucket, key) and then on bucket.
+        epoch from ONE column-pruned pass over the flagged envelopes,
+        off ONE exchange (B small rows collected; no driver footer
+        opens, so flat in the bucket count).
 
-        ``rows`` counts distinct keys among the rows the merge applies
-        (``applies``: valid and above the watermark) — exactly the LWW
-        winners — and ``max_lsn`` is their max lsn; ``conflicts`` is
-        ``sum(_q)`` and ``rows_in`` the row count over every envelope.
+        Each envelope is pruned to four narrow columns: its bucket
+        ``_b``, its key and lsn where it applies (``applies``: valid and
+        above the watermark; NULL otherwise) and its ``_q`` flag. The
+        rows are repartitioned by ``_b``, and that partitioning satisfies
+        both aggregates above it: per (bucket, key), then per bucket.
+        ``rows`` is ``count(_k)`` over the (bucket, key) groups — the
+        distinct applied keys, exactly the LWW winners, since the one
+        NULL-key group is not counted — and ``max_lsn`` is their max
+        lsn; ``conflicts`` is ``sum(_q)`` and ``rows_in`` the row count
+        over every envelope. ``count_distinct`` would plan a second
+        exchange (and AQE a third job). The trade: without a partial
+        aggregate before the exchange there is no map-side combine, so
+        a hot key's rows all reach one reducer, as the four narrow
+        columns only.
+
         The counts come from the aggregate itself, not an
         ``Observation`` below it: a metrics observer under an aggregate
         whose input the watermark empties fails in ``Observation.get``.
         """
         key = snap.key_column
         rows = (
-            flagged.groupBy(
-                bucket_expr(key, snap.num_buckets).alias("_b")
+            flagged.select(
+                bucket_expr(key, snap.num_buckets).alias("_b"),
+                F.when(applies, F.col(key)).alias("_k"),
+                F.when(applies, F.col("lsn")).alias("_l"),
+                "_q",
             )
+            .repartition("_b")
+            .groupBy("_b", "_k")
             .agg(
-                F.count_distinct(F.when(applies, F.col(key))).alias("rows"),
-                F.max(F.when(applies, F.col("lsn"))).alias("max_lsn"),
+                F.max("_l").alias("_l"),
                 F.sum("_q").alias("q"),
                 F.count(F.lit(1)).alias("n"),
+            )
+            .groupBy("_b")
+            .agg(
+                F.count("_k").alias("rows"),
+                F.max("_l").alias("max_lsn"),
+                F.sum("q").alias("q"),
+                F.sum("n").alias("n"),
             )
             .collect()
         )
@@ -342,12 +367,7 @@ class CdcEngine:
             err = exc
             raise
         finally:
-            # best-effort: the history append must never mask the real
-            # ingest exception (e.g. unreadable metadata in a crash)
-            try:
-                self._append_run_history(results, time.time() - t0, err)
-            except Exception:
-                pass
+            self._append_run_history_quietly(results, time.time() - t0, err)
         return results
 
     def follow(
@@ -411,11 +431,22 @@ class CdcEngine:
             err = exc
             raise
         finally:
-            try:
-                self._append_run_history(results, time.time() - t0, err)
-            except Exception:
-                pass
+            self._append_run_history_quietly(results, time.time() - t0, err)
         return results
+
+    def _append_run_history_quietly(
+        self, results: list, dur: float, err: BaseException | None
+    ) -> None:
+        """Bookkeeping after publish never masks the ingest outcome: a
+        failed history append (unreadable metadata after a crash, a full
+        disk) is logged to stderr and never raised, so ``run()`` and
+        ``follow()`` still return their results or raise the real
+        ingest exception."""
+        try:
+            self._append_run_history(results, dur, err)
+        except Exception as exc:
+            print(f"WARNING: run history append to {self.checkpoint_dir} "
+                  f"failed: {type(exc).__name__}: {exc}", file=sys.stderr)
 
     def _append_run_history(
         self, results: list, dur: float, err: BaseException | None = None
@@ -565,11 +596,13 @@ class CdcEngine:
         # update otherwise). MOR commits name it too, for the layout
         # guard alone. The change side is the UN-deduped valid lane:
         # merge_upsert_lww's one max_by picks each key's winner among
-        # base and changes alike, off a single repartition(B, key) that
-        # the bucket-pure write reuses. n_tok is recomputed on the change
-        # side (derive-if-missing/wrong; the union keeps the table's
-        # n_tok type under widening). The ``salted`` flag collapses a hot
-        # key to ≤ num_salts rows per salt stage BEFORE that exchange.
+        # base and changes alike, off a single repartition(P, key) that
+        # the bucket-pure write reuses (P = write_partitions: the
+        # writer's own width, so its repartition is elided). n_tok is
+        # recomputed on the change side (derive-if-missing/wrong; the
+        # union keeps the table's n_tok type under widening). The
+        # ``salted`` flag collapses a hot key to ≤ num_salts rows per
+        # salt stage BEFORE that exchange.
         changes = flagged.filter(applies).drop("_q", "_bucket")
         if self.salted:
             changes = lww_dedup_salted(
@@ -577,12 +610,13 @@ class CdcEngine:
             )
         base = self.table.read(self.spark, buckets=touched, snapshot=snap)
         merged = merge_upsert_lww(
-            base, recompute_n_tok(changes), key=key, num_partitions=B
+            base, recompute_n_tok(changes), key=key,
+            num_partitions=write_partitions(self.spark, B),
         )
 
         # 9. write + DQ gate (its counts ride the write job).
-        # write_data_files' repartition(B, key) is elided: the merge
-        # already partitioned on the key at B.
+        # write_data_files' repartition(P, key) is elided: the merge
+        # already partitioned on the key at P.
         new_files, rows_out = self._write_epoch(merged, snap, epoch, touched)
 
         # 10. atomic publish + lineage + metrics (guarded on the
@@ -618,13 +652,14 @@ class CdcEngine:
         ).filter(_applies(snap)).drop("_q", "_bucket")  # 5. applied rows
 
         # 6. LWW dedup — deterministic winner per key by max lsn.
-        # Default plan: repartition(B, key) FIRST, then groupBy(key) — the
-        # aggregate's clustering requirement is satisfied by the key
-        # partitioning, and write_data_files' own repartition(B, key) is
-        # elided, so dedup AND the bucket-pure write share ONE exchange
-        # (guide §2.4). Trade, priced in BASELINE.md: the single exchange
-        # moves raw rows, so a pathological hot key lands on one reducer
-        # before collapsing — the ``salted`` flag first collapses a hot
+        # Default plan: repartition(P, key) FIRST (P = write_partitions,
+        # the writer's width), then groupBy(key) — the aggregate's
+        # clustering requirement is satisfied by the key partitioning,
+        # and write_data_files' own repartition(P, key) is elided, so
+        # dedup AND the bucket-pure write share ONE exchange (guide §2.4).
+        # Trade, priced in BASELINE.md: the single exchange moves raw
+        # rows, so a pathological hot key lands on one reducer before
+        # collapsing — the ``salted`` flag first collapses a hot
         # key to ≤ num_salts rows (two-stage plan) for that regime.
         # 7. n_tok recomputed (derive-if-missing/wrong).
         if self.salted:
@@ -632,7 +667,8 @@ class CdcEngine:
                 changes, key=key, num_salts=self.num_salts
             )
         deduped = recompute_n_tok(
-            lww_dedup(changes.repartition(B, F.col(key)), key=key)
+            lww_dedup(changes.repartition(write_partitions(self.spark, B),
+                                          F.col(key)), key=key)
         )
         # 8. write the delta files + DQ gate. Bucket-pure, so each file's
         # footer gives its bucket's applied rows and max lsn.

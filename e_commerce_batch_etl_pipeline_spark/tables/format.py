@@ -381,7 +381,7 @@ def _build_entries(
     src_dir: str, rel_dir: str, key_column: str, wanted: set | None
 ) -> list[dict]:
     """File entries (with footer stats) for every non-empty bucket-pure
-    ``part-0000i-*`` file in ``src_dir``. Footer opens run on a thread
+    ``part-<bucket>-*`` file in ``src_dir``. Footer opens run on a thread
     pool (I/O-bound, GIL released inside pyarrow) so a 4096-bucket
     commit's entry build is not 4096 SERIAL driver reads. A merge-on-read
     epoch reads its per-bucket rows and max lsn from these entries
@@ -405,6 +405,29 @@ def _build_entries(
         )
 
     return [e for e in _io_pool().map(one, cands) if e is not None]
+
+
+def _flatten_bucket_dirs(out_dir: str) -> None:
+    """Move every file of a ``partitionBy("_bucket")`` write up into
+    ``out_dir``: ``_bucket=<b>/part-<rest>`` becomes ``part-<b:05d>-<rest>``
+    and its ``.crc`` sidecar moves with it; the emptied ``_bucket=*`` dirs
+    are removed. ``<rest>`` (task id, write uuid, split counter) is unique
+    within a bucket dir, so the flat names are unique by construction and
+    ``_build_entries`` reads the bucket from the name."""
+    for d in os.listdir(out_dir):
+        if not d.startswith("_bucket="):
+            continue
+        b = int(d[len("_bucket="):])
+        src = os.path.join(out_dir, d)
+        for fn in os.listdir(src):
+            if not fn.startswith("part-"):
+                continue
+            flat = f"part-{b:05d}-{fn[len('part-'):]}"
+            os.rename(os.path.join(src, fn), os.path.join(out_dir, flat))
+            crc = os.path.join(src, f".{fn}.crc")
+            if os.path.exists(crc):
+                os.rename(crc, os.path.join(out_dir, f".{flat}.crc"))
+        shutil.rmtree(src)
 
 
 def _attempt_dir(root: str) -> tuple[str, str]:
@@ -609,17 +632,9 @@ def commit_lock(root: str, wait_sec: float | None = None):
 
 @contextmanager
 def bucket_aligned_write(spark):
-    """Pin shuffle→file alignment for bucket-pure writes.
+    """Keep ``df.observe`` metrics alive through an empty bucket-pure write.
 
-    An explicit ``repartition(B, key)`` over a child already
-    hash-partitioned on the key is ELIDED by the planner, after which AQE
-    is free to coalesce the child's (non-user-specified) shuffle — merging
-    partitions and breaking the partition-index == bucket invariant. The
-    partition count of these writes IS the table layout, so runtime
-    re-planning must not touch it here; AQE coalescing stays on everywhere
-    else.
-
-    AQE's ``AQEPropagateEmptyRelation`` is excluded for the same writes:
+    AQE's ``AQEPropagateEmptyRelation`` is excluded for these writes:
     when a shuffle stage comes out empty it replaces that stage's parent
     subtree, and any ``df.observe`` (CollectMetrics) under it, with an
     empty relation, so ``Observation.get`` finds no metrics row and
@@ -627,39 +642,59 @@ def bucket_aligned_write(spark):
     below the watermark writes an empty shuffle and still reads its
     counts from an observe. The rule is appended to any existing
     exclusions and the previous value is restored on exit.
+
+    AQE partition coalescing stays on: the writer splits every task's
+    rows into one file per bucket (``partitionBy``), so file purity no
+    longer rests on a shuffle partition index equalling the bucket. A
+    coalesced partition is a union of whole hash partitions, and every
+    file it writes still holds one bucket.
     """
-    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     excluded = "spark.sql.adaptive.optimizer.excludedRules"
-    old = {k: spark.conf.get(k, None) for k in (coalesce, excluded)}
-    rules = [r for r in (old[excluded] or "").split(",") if r]
-    spark.conf.set(coalesce, "false")
+    old = spark.conf.get(excluded, None)
+    rules = [r for r in (old or "").split(",") if r]
     spark.conf.set(excluded, ",".join(rules + [
         "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
     ]))
     try:
         yield
     finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        if old is None:
+            spark.conf.unset(excluded)
+        else:
+            spark.conf.set(excluded, old)
 
 
 def bucket_expr(key_col: str, num_buckets: int):
     """Deterministic bucket id for a key: pmod(murmur3(key), B).
 
     Deliberately IDENTICAL to Spark's HashPartitioning formula
-    (``pmod(Murmur3Hash(key), n)``): after ``df.repartition(B, key)``,
-    shuffle partition *i* contains exactly bucket *i*'s rows. The writer
-    exploits this — data files come out bucket-pure with NO extra
-    repartition/partitionBy pass, and a join shuffled on the key at B
-    partitions is already aligned with the table layout. Stability:
-    Murmur3Hash(seed 42) is part of Spark's shuffle contract and cannot
-    change without breaking every bucketed table; tests assert file
-    purity against this expression.
+    (``pmod(Murmur3Hash(key), n)``). For any P that divides B,
+    ``bucket mod P`` is the hash partition of ``repartition(P, key)``,
+    so every bucket's rows land in exactly one of those P partitions:
+    the writer tags rows with this expression and splits each task's
+    rows into one file per bucket, and a join or aggregate shuffled on
+    the key at P partitions is already aligned with the table layout
+    (``write_partitions``). File naming no longer comes from a
+    partition index: ``write_data_files`` names each file after the
+    bucket value it was split on. Stability: Murmur3Hash(seed 42) is
+    part of Spark's shuffle contract and cannot change without breaking
+    every bucketed table; tests assert file purity against this
+    expression.
     """
     return F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets)).cast("int")
+
+
+def write_partitions(spark: SparkSession, num_buckets: int) -> int:
+    """The shuffle width P of a bucket-pure write of ``num_buckets``
+    buckets: the largest divisor of B that is at most the session's task
+    slots (``defaultParallelism``), so the write runs in one task wave
+    and each bucket lives in exactly one task. When that divisor is
+    below half the slots (a prime B, say) it returns B instead: one task
+    per bucket, in several waves, rather than most slots idle."""
+    slots = max(1, spark.sparkContext.defaultParallelism)
+    p = max(d for d in range(1, min(num_buckets, slots) + 1)
+            if num_buckets % d == 0)
+    return p if 2 * p >= slots else num_buckets
 
 
 def _delta_schema(target: T.StructType) -> T.StructType:
@@ -1317,13 +1352,23 @@ class LakeTable:
         ``commit(planned=)``; ``None`` reads the head. A rebucket passes
         its target layout (``dataclasses.replace(snap, num_buckets=N)``).
 
-        ``df.repartition(B, key)`` uses Spark's HashPartitioning, whose
-        partition index equals ``bucket_expr`` by construction — so a flat
-        write yields exactly one bucket-pure file per non-empty bucket
-        (file ``part-0000i-*`` ↔ bucket *i*), with no partitionBy
-        dynamic-partition pass and no second shuffle (an upstream join or
-        aggregate already hash-partitioned on the key at B partitions is
-        elided). This is the reference's file-count control
+        The rows go through ``repartition(P, key)``, with P from
+        ``write_partitions`` (the largest divisor of B that fits the
+        session's task slots), are tagged with ``_bucket =
+        bucket_expr(key, B)`` and written with ``partitionBy("_bucket")``:
+        each task splits its rows into one file per bucket, the
+        dynamic-partition shape Delta Lake writes partitioned tables
+        with. P divides B, so every bucket lives in exactly one task and
+        gets exactly one file, and the whole write runs in one task wave.
+        A user-specified repartition is never coalesced by AQE, and an
+        upstream join or aggregate already hash-partitioned on the key at
+        P partitions elides it (the CoW merge and the MOR LWW shuffle at
+        the same P), so the write adds no exchange of its own. Before the
+        entries are built, each ``_bucket=<b>/part-<rest>`` file moves up
+        to the flat ``part-<b:05d>-<rest>`` (its ``.crc`` sidecar with it)
+        and the ``_bucket=*`` dirs are removed: manifests and readers
+        only ever see the flat ``data/commit-<attempt>/part-<bucket>-*``
+        layout. This is the reference's file-count control
         (``src/load.py:34-41``) upgraded into the commit protocol. One
         fresh output dir per attempt (``_attempt_dir``), in the table: the
         files go live only when a commit references them, and a dead
@@ -1339,30 +1384,31 @@ class LakeTable:
         (hash-scattered) key range and can never be pruned by key.
         """
         snap = planned if planned is not None else self.current()
+        key, B = snap.key_column, snap.num_buckets
         rel_dir, out_dir = _attempt_dir(self.root)
         out = df.drop("_bucket").repartition(
-            snap.num_buckets, F.col(snap.key_column)
-        )
+            write_partitions(df.sparkSession, B), F.col(key)
+        ).withColumn("_bucket", bucket_expr(key, B))
         if sort_by_key:
             # Iceberg-style sort order: rows stream to the writer in key
-            # order, so maxRecordsPerFile's sequential splits each hold a
-            # CONTIGUOUS key range — per-file manifest [min_key, max_key]
-            # become tight and disjoint within a bucket, and key_range /
-            # lookup pruning works INSIDE buckets, not just across them.
-            # The split files keep the task's part-0000i index (Spark
-            # names them part-0000i-<uuid>.c000/.c001/...), so the
-            # filename↔bucket mapping survives the split.
-            out = out.sortWithinPartitions(snap.key_column)
-        writer = out.write.mode("overwrite")
+            # order within each bucket, so maxRecordsPerFile's sequential
+            # splits each hold a CONTIGUOUS key range — per-file manifest
+            # [min_key, max_key] become tight and disjoint within a
+            # bucket, and key_range / lookup pruning works INSIDE
+            # buckets, not just across them. Spark names the splits
+            # part-<task>-<uuid>.c000/.c001/... inside the bucket's dir.
+            out = out.sortWithinPartitions("_bucket", key)
+        writer = out.write.mode("overwrite").partitionBy("_bucket")
         if max_records_per_file is not None:
             writer = writer.option(
                 "maxRecordsPerFile", int(max_records_per_file)
             )
         with bucket_aligned_write(df.sparkSession):
             writer.parquet(out_dir)
+        _flatten_bucket_dirs(out_dir)
         wanted = set(buckets_touched) if buckets_touched is not None else None
-        # empty partitions (bucket has no data) drop out inside
-        entries = _build_entries(out_dir, rel_dir, snap.key_column, wanted)
+        # a bucket with no rows has no _bucket dir, hence no file
+        entries = _build_entries(out_dir, rel_dir, key, wanted)
         if not entries:
             shutil.rmtree(out_dir, ignore_errors=True)
         elif collect_blooms:
@@ -1373,9 +1419,7 @@ class LakeTable:
             from .bloom import attach_blooms, bucket_blooms
 
             written = df.sparkSession.read.parquet(out_dir)
-            blooms = bucket_blooms(
-                written, snap.key_column, snap.num_buckets
-            )
+            blooms = bucket_blooms(written, key, B)
             entries = attach_blooms(self.root, entries, blooms)
         return entries
 

@@ -769,3 +769,26 @@ def test_epoch_racing_a_rebucket_lands_in_the_new_layout(
     payload = ["tokens", "n_tok", "source"]
     expected = _oracle_state(base, wal, spark, payload)
     assert_states_equal(expected, _collect_state(table.read(spark), payload))
+
+
+def test_run_and_follow_survive_run_history_failure(
+        spark, tmpdir_clean, monkeypatch, capsys):
+    """A failed run-history append is bookkeeping after publish: ``run()``
+    and ``follow()`` still return their results, and the failure is
+    logged to stderr rather than swallowed."""
+    table, wal, _ = _setup(spark, tmpdir_clean)
+    ckpt = os.path.join(tmpdir_clean, "ckpt")
+    eng = CdcEngine(spark, table, wal, ckpt)
+
+    def boom(*args, **kwargs):
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(CdcEngine, "_append_run_history", boom)
+    assert [r.status for r in eng.run(max_epochs=1)] == ["committed"]
+    err = capsys.readouterr().err
+    assert "WARNING: run history" in err and "no space left" in err
+    res = eng.follow(poll_sec=0.1, idle_timeout_sec=0, max_epochs=1)
+    assert [(r.epoch, r.status) for r in res] == [(1, "committed")]
+    err = capsys.readouterr().err
+    assert "WARNING: run history" in err and "no space left" in err
+    assert not os.path.exists(os.path.join(ckpt, "run_history.jsonl"))

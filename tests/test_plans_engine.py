@@ -305,3 +305,141 @@ def test_mor_epoch_stages_applied_rows_off_one_exchange(
         assert keys and all(re.fullmatch(r"doc_id#\d+", k) for k in keys), plan
         assert "BroadcastExchange" not in plan, plan
         assert not [f for f in listing if f.startswith("_q=")], listing
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_epoch_writes_bucket_pure_files_in_one_task_wave(
+        spark, tmp_path, monkeypatch, mode):
+    """At B=16 on local[4] an epoch's write is planned off ONE
+    ``hashpartitioning(doc_id, 4)`` exchange (the merge's or the MOR
+    LWW's, which the writer reuses) and leaves one flat, bucket-pure
+    ``part-<bucket>-*`` file, with its ``.crc``, per touched bucket and
+    no ``_bucket=`` dir."""
+    from e_commerce_batch_etl_pipeline_spark.sources.datagen import write_wal
+    from e_commerce_batch_etl_pipeline_spark.sources.wal import WalSource
+    from e_commerce_batch_etl_pipeline_spark.streaming.microbatch import (
+        CdcEngine,
+    )
+    from e_commerce_batch_etl_pipeline_spark.tables.format import (
+        LakeTable,
+        write_partitions,
+    )
+
+    from .test_table_format import assert_flat_pure_files
+
+    assert write_partitions(spark, 16) == 4
+    root = str(tmp_path)
+    base = generate_base_docs(spark, 600, seed=9, max_len=16)
+    table = bootstrap_table(os.path.join(root, "t"), base, num_buckets=16)
+    write_wal(spark, os.path.join(root, "wal"), 1, 300, 600, seed=9,
+              max_len=16, invalid_frac=0.05)
+    written = []
+    write = LakeTable.write_data_files
+
+    def spy(self, df, *args, **kwargs):
+        plan = physical_plan(df.repartition(4, F.col("doc_id")))
+        files = write(self, df, *args, **kwargs)
+        written.append((plan, files))
+        return files
+
+    monkeypatch.setattr(LakeTable, "write_data_files", spy)
+    res = CdcEngine(spark, table, WalSource(os.path.join(root, "wal")),
+                    os.path.join(root, "ckpt"), merge_mode=mode,
+                    mor_compact_files=None).run()
+    assert [r.status for r in res] == ["committed"]
+    assert len(written) == 1
+    plan, files = written[0]
+    tree = plan.split("\n\n")[0]
+    assert tree.count("Exchange") == 1, plan
+    assert re.search(r"hashpartitioning\(doc_id#\d+, 4\)", plan), plan
+    assert res[0].buckets_touched == 16
+    assert sorted(f["bucket"] for f in files) == list(range(16))
+    assert_flat_pure_files(spark, table.root, files, 16)
+    attempts = [d for d in os.listdir(os.path.join(table.root, "data"))]
+    for d in attempts:
+        assert not [x for x in os.listdir(os.path.join(table.root, "data", d))
+                    if x.startswith("_bucket=")]
+
+
+def test_cow_prepass_matches_count_distinct_off_one_exchange(
+        spark, monkeypatch):
+    """The CoW pre-pass groups (bucket, key) and then bucket off ONE
+    exchange, and returns exactly what the ``count_distinct`` form
+    returned, over hot keys, equal-lsn U/D ties, deletes, invalid rows
+    and rows at or below their bucket's watermark."""
+    from e_commerce_batch_etl_pipeline_spark.functions.tokens import (
+        envelope_validity,
+    )
+    from e_commerce_batch_etl_pipeline_spark.streaming.microbatch import (
+        CdcEngine,
+    )
+    from e_commerce_batch_etl_pipeline_spark.tables.format import bucket_expr
+
+    B = 16
+    snap = SimpleNamespace(
+        key_column="doc_id", num_buckets=B,
+        watermark={str(b): 100 for b in range(0, B, 2)},
+    )
+    rows = []
+    for lsn in range(1, 301):
+        key = "hot" if lsn % 3 == 0 else f"k{lsn % 40}"
+        op = "D" if lsn % 7 == 0 else "U"
+        rows.append((lsn, op, key, [1, 2]))
+    rows += [
+        (150, "U", "tie", [3]), (150, "D", "tie", None),  # equal-lsn tie
+        (160, "D", "gone", None),
+        (170, "U", None, [1]),                            # null key
+        (171, "X", "bad_op", [1]),                        # bad op
+        (172, "I", "empty", []),                          # empty tokens
+        (None, "U", "no_lsn", [1]),                       # null lsn
+    ]
+    # keys seen only at lsn <= 100: applied in odd buckets, already
+    # applied (below the watermark) in even ones
+    rows += [(50 + i, "U", f"old{i}", [1]) for i in range(12)]
+    flagged = spark.createDataFrame(
+        rows, "lsn long, op string, doc_id string, tokens array<int>"
+    ).withColumn("_q", (~envelope_validity()).cast("int"))
+    applies = _applies(snap)
+
+    old = flagged.groupBy(bucket_expr("doc_id", B).alias("_b")).agg(
+        F.count_distinct(F.when(applies, F.col("doc_id"))).alias("rows"),
+        F.max(F.when(applies, F.col("lsn"))).alias("max_lsn"),
+        F.sum("_q").alias("q"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()
+    want = (
+        {int(r["_b"]): {"rows": int(r["rows"]),
+                        "max_lsn": int(r["max_lsn"])}
+         for r in old if r["rows"]},
+        sum(int(r["q"]) for r in old),
+        sum(int(r["n"]) for r in old),
+    )
+
+    plans = []
+    cls = type(flagged)
+    collect = cls.collect
+
+    def spy(self):
+        plans.append(physical_plan(self))
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    got = CdcEngine._cow_prepass(None, flagged, applies, snap)
+    monkeypatch.undo()
+
+    assert got == want
+    stats, conflicts, rows_in = got
+    assert conflicts == 4 and rows_in == len(rows)
+    # the watermark drops the even buckets' old keys, not the odd ones'
+    old_bucket = {r["doc_id"]: r["b"] for r in spark.createDataFrame(
+        [(f"old{i}",) for i in range(12)], "doc_id string",
+    ).select("doc_id", bucket_expr("doc_id", B).alias("b")).collect()}
+    dropped = {k for k, b in old_bucket.items() if b % 2 == 0}
+    assert 0 < len(dropped) < 12
+    valid_keys = {r[2] for r in rows if r[2] and r[0] is not None} - {
+        "bad_op", "empty"}
+    assert sum(s["rows"] for s in stats.values()) == len(
+        valid_keys - dropped)
+    assert len(plans) == 1
+    tree = plans[0].split("\n\n")[0]
+    assert tree.count("Exchange") == 1, plans[0]

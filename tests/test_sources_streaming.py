@@ -438,3 +438,95 @@ def test_windowed_rates_append_emission_batching_invariant(
     coarse = run(64, "inv_coarse")
     assert fine, "vacuous: no windows below the cutoff"
     assert fine == coarse
+
+
+def _wal_segments(spark, wal):
+    """Three WAL segments: epoch 0 Spark-written by ``write_wal``; epoch
+    1 Spark-written and evolved (a new ``lang`` column, ``n_tok``
+    widened to bigint); epoch 2 pyarrow-written with a
+    ``timestamp[us, UTC]`` ``ts``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from e_commerce_batch_etl_pipeline_spark.sources.datagen import (
+        generate_wal_epoch,
+        write_wal,
+    )
+
+    write_wal(spark, wal, 1, 60, 40, seed=1, max_len=8)
+    generate_wal_epoch(
+        spark, 1, 60, 40, seed=1, max_len=8, evolve_from_epoch=1,
+    ).withColumn("n_tok", F.col("n_tok").cast("bigint")).write.parquet(
+        os.path.join(wal, "epoch-00001"))
+    seg = os.path.join(wal, "epoch-00002")
+    os.makedirs(seg)
+    pq.write_table(pa.table({
+        "lsn": pa.array([120, 121, 122], pa.int64()),
+        "epoch": pa.array([2, 2, 2], pa.int32()),
+        "op": pa.array(["I", "U", "D"]),
+        "doc_id": pa.array(["doc_000000001", None, "doc_000000003"]),
+        "tokens": pa.array([[1, 2], [3], None], pa.list_(pa.int32())),
+        "n_tok": pa.array([2, 1, None], pa.int32()),
+        "source": pa.array(["web", "code", None]),
+        "ts": pa.array([1, 2, 3], pa.timestamp("us", "UTC")),
+    }), os.path.join(seg, "part-00000.parquet"))
+    open(os.path.join(seg, "_SUCCESS"), "w").close()
+
+
+def test_wal_footer_schema_equals_spark_inference(spark, tmpdir_clean):
+    """``read_epoch`` pins the schema Spark would infer, for Spark- and
+    pyarrow-written segments alike, and reads the same rows; a segment
+    with no parquet file still fails in Spark's inference."""
+    from pyspark.errors import AnalysisException
+
+    from e_commerce_batch_etl_pipeline_spark.sources.wal import (
+        WalSource,
+        segment_schema,
+    )
+
+    wal = os.path.join(tmpdir_clean, "wal")
+    _wal_segments(spark, wal)
+    src = WalSource(wal)
+    for e in (0, 1, 2):
+        seg = os.path.join(wal, f"epoch-{e:05d}")
+        inferred = spark.read.parquet(seg)
+        assert segment_schema(seg) is not None, e
+        pinned = src.read_epoch(spark, e)
+        assert pinned.schema == inferred.schema, e
+        assert sorted(pinned.collect()) == sorted(inferred.collect()), e
+    evolved = dict((f.name, f.dataType) for f in
+                   src.read_epoch(spark, 1).schema.fields)
+    assert "lang" in evolved and evolved["n_tok"] == T.LongType()
+    arrow = src.read_epoch(spark, 2).schema
+    assert arrow["ts"].dataType == T.TimestampType()
+    os.makedirs(os.path.join(wal, "epoch-00003"))
+    assert segment_schema(os.path.join(wal, "epoch-00003")) is None
+    with pytest.raises(AnalysisException, match="infer schema"):
+        src.read_epoch(spark, 3)
+
+
+def test_wal_read_epoch_starts_no_spark_job(spark, tmpdir_clean):
+    """Reading an epoch's segment runs no Spark job (no schema
+    inference); Spark's own inference over the same segment runs one."""
+    import time
+
+    from e_commerce_batch_etl_pipeline_spark.sources.wal import WalSource
+
+    wal = os.path.join(tmpdir_clean, "wal")
+    _wal_segments(spark, wal)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for e in (0, 1, 2):
+            sc.setJobGroup(f"wal-read-{e}", "read_epoch")
+            WalSource(wal).read_epoch(spark, e).schema
+        sc.setJobGroup("wal-infer", "inference")
+        spark.read.parquet(os.path.join(wal, "epoch-00000")).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("wal-infer"):
+        assert time.time() < deadline, "the inference job never showed"
+        time.sleep(0.1)
+    for e in (0, 1, 2):
+        assert tracker.getJobIdsForGroup(f"wal-read-{e}") == [], e

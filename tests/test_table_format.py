@@ -513,3 +513,98 @@ def test_io_pool_refuses_reentry():
 
     with pytest.raises(RuntimeError, match="lake-io"):
         fmt._io_pool().submit(fmt._io_pool).result()
+
+
+def assert_flat_pure_files(spark, root, entries, num_buckets,
+                           key="doc_id"):
+    """The bucket-pure writer's layout: one flat ``part-<bucket>-*``
+    file per bucket, each with its ``.crc`` sidecar and holding only
+    rows of its bucket, and no ``_bucket=`` dir left in the attempt
+    dir."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    buckets = [e["bucket"] for e in entries]
+    assert len(buckets) == len(set(buckets)), buckets
+    for e in entries:
+        d, fn = os.path.split(e["path"])
+        assert re.fullmatch(rf"part-{e['bucket']:05d}-\S+\.parquet", fn), fn
+        listing = os.listdir(os.path.join(root, d))
+        assert f".{fn}.crc" in listing, listing
+        assert not [x for x in listing if x.startswith("_bucket=")], listing
+    seen = spark.read.parquet(
+        *(os.path.join(root, e["path"]) for e in entries)
+    ).select(
+        F.input_file_name().alias("f"),
+        bucket_expr(key, num_buckets).alias("b"),
+    ).distinct().collect()
+    by_name = {os.path.basename(e["path"]): e["bucket"] for e in entries}
+    assert len(seen) == len(entries), seen
+    for r in seen:
+        assert by_name[os.path.basename(r["f"])] == r["b"], r
+
+
+def test_write_partitions_fits_one_task_wave():
+    """P is the largest divisor of B within the session's task slots,
+    or B itself when that divisor would idle most slots."""
+    from types import SimpleNamespace
+
+    from e_commerce_batch_etl_pipeline_spark.tables.format import (
+        write_partitions,
+    )
+
+    for (b, slots), p in {(16, 4): 4, (4, 4): 4, (2, 4): 2, (6, 4): 3,
+                          (4096, 4): 4, (7, 4): 7}.items():
+        fake = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=slots))
+        assert write_partitions(fake, b) == p, (b, slots)
+
+
+def test_coalesced_upstream_grouping_still_writes_pure_files(
+        spark, tmpdir_clean):
+    """AQE coalescing stays on through the write. An input grouped
+    upstream by the key at ``shuffle.partitions == P`` elides the
+    writer's repartition, and AQE coalesces that grouping's shuffle
+    into one task; the task still splits its rows into one pure file per
+    bucket."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from e_commerce_batch_etl_pipeline_spark.plans import physical_plan
+    from e_commerce_batch_etl_pipeline_spark.streaming.bootstrap import (
+        DOCS_SCHEMA,
+    )
+    from e_commerce_batch_etl_pipeline_spark.tables.format import (
+        LakeTable,
+        bucket_aligned_write,
+        write_partitions,
+    )
+
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    assert spark.conf.get(coalesce) == "true"
+    with bucket_aligned_write(spark):
+        assert spark.conf.get(coalesce) == "true"
+    assert spark.conf.get(coalesce) == "true"
+    P = write_partitions(spark, 16)
+    assert P == 4 == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    table = LakeTable.create(os.path.join(tmpdir_clean, "t"), DOCS_SCHEMA,
+                             key_column="doc_id", num_buckets=16)
+    grouped = generate_base_docs(spark, 2000, seed=3, max_len=8).groupBy(
+        "doc_id").agg(*(F.first(c).alias(c)
+                        for c in ("tokens", "n_tok", "source")))
+    # the writer's repartition(P, key) over it is elided: one exchange,
+    # the grouping's own, which AQE may coalesce
+    plan = physical_plan(grouped.repartition(P, F.col("doc_id")))
+    assert plan.split("\n\n")[0].count("Exchange") == 1, plan
+    assert re.search(r"hashpartitioning\(doc_id#\d+, 4\)", plan), plan
+
+    entries = table.write_data_files(grouped)
+    assert sorted(e["bucket"] for e in entries) == list(range(16))
+    assert sum(e["rows"] for e in entries) == 2000
+    # coalesced: one task wrote every bucket's file
+    assert len({os.path.basename(e["path"]).split("-")[2]
+                for e in entries}) == 1, entries
+    assert_flat_pure_files(spark, table.root, entries, 16)

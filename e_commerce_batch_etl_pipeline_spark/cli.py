@@ -61,7 +61,7 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--max-epochs", type=int, default=None)
     r.add_argument("--salted", action="store_true",
                    help="two-stage salted LWW: collapses a hot key to "
-                        "<= num_salts rows before the epoch's single key "
+                        "<= 16 rows before the epoch's single key "
                         "exchange, which otherwise sends all of its raw "
                         "rows to one reducer")
     r.add_argument("--merge-mode", choices=["cow", "mor"], default="cow",

@@ -87,6 +87,9 @@ from ..sources.wal import WalSource
 from ..tables.format import LakeTable, bucket_expr, write_partitions
 
 ENVELOPE_COLS = {"lsn", "epoch", "op", "ts"}
+# an epoch that loses the snapshot CAS re-runs against the new head at
+# most this many times before the ConcurrentCommitError propagates
+COMMIT_RETRIES = 5
 
 
 def _applies(snap):
@@ -139,13 +142,11 @@ class CdcEngine:
         wal: WalSource,
         checkpoint_dir: str,
         salted: bool = False,
-        num_salts: int = 16,
         broadcast_threshold: int = 100_000,
         audit_quarantine: bool = True,
         strict_dq: bool = False,
         merge_mode: str = "cow",
         mor_compact_files: int | None = 8,
-        commit_retries: int = 5,
         delta_blooms: bool = False,
     ):
         """``merge_mode``:
@@ -184,7 +185,6 @@ class CdcEngine:
         self.wal = wal
         self.checkpoint_dir = checkpoint_dir
         self.salted = salted
-        self.num_salts = num_salts
         self.audit_quarantine = audit_quarantine
         self.strict_dq = strict_dq
         if merge_mode not in ("cow", "mor"):
@@ -193,7 +193,6 @@ class CdcEngine:
             )
         self.merge_mode = merge_mode
         self.mor_compact_files = mor_compact_files
-        self.commit_retries = commit_retries
         self.delta_blooms = delta_blooms
         os.makedirs(checkpoint_dir, exist_ok=True)
         os.makedirs(os.path.join(checkpoint_dir, "lineage"), exist_ok=True)
@@ -242,9 +241,8 @@ class CdcEngine:
         a hot key's rows all reach one reducer, as the four narrow
         columns only.
 
-        The counts come from the aggregate itself, not an
-        ``Observation`` below it: a metrics observer under an aggregate
-        whose input the watermark empties fails in ``Observation.get``.
+        ``conflicts`` and ``rows_in`` ride the aggregate the pre-pass
+        runs anyway, so they need no ``Observation`` of their own.
         """
         key = snap.key_column
         rows = (
@@ -306,11 +304,10 @@ class CdcEngine:
         files (LWW output is unique per key by construction, so this
         guards against regressions, not data; one extra job). MOR delta
         files get Bloom filters with ``delta_blooms``. Returns the file
-        entries and the written row count."""
+        entries; their footer ``rows`` are the written row counts."""
         key = snap.key_column
         obs = Observation()
         observed = df.observe(obs, *expr_memo(("engine.dq", key), lambda: (
-            F.count(F.lit(1)).alias("rows"),
             F.sum(F.when(F.col("n_tok") != F.size(F.col("tokens")), 1)
                   .otherwise(0)).alias("bad_ntok"),
             F.sum(F.when(F.col(key).isNull(), 1).otherwise(0)).alias(
@@ -341,7 +338,7 @@ class CdcEngine:
             if int(nk["n"]) != int(nk["k"]):
                 raise RuntimeError(f"DQ FAIL epoch {epoch}: duplicate keys "
                                    "in the written files")
-        return files, int(m["rows"])
+        return files
 
     # ---------- the loop ----------
 
@@ -486,9 +483,9 @@ class CdcEngine:
         front-end (streaming/structured.py) — the streaming batch id is
         the epoch, and the fence set makes redelivery a no-op.
 
-        Retries the WHOLE epoch on ConcurrentCommitError (bounded by
-        ``commit_retries``): a retry re-reads the table state, re-merges
-        and re-commits — the optimistic-concurrency loop that lets two
+        Retries the WHOLE epoch on ConcurrentCommitError (at most
+        ``COMMIT_RETRIES`` times): a retry re-reads the table state,
+        re-merges and re-commits — the optimistic-concurrency loop that lets two
         engine processes ingest into one table (each loser of a CoW CAS
         race re-derives its merge from the winner's snapshot; an epoch
         the other writer already committed resolves to "skipped" at the
@@ -497,7 +494,7 @@ class CdcEngine:
         from ..tables.format import ConcurrentCommitError
 
         last: Exception | None = None
-        for _ in range(self.commit_retries + 1):
+        for _ in range(COMMIT_RETRIES + 1):
             try:
                 return self._apply_changes_once(raw, epoch)
             except ConcurrentCommitError as exc:
@@ -601,13 +598,11 @@ class CdcEngine:
         # writer's own width, so its repartition is elided). n_tok is
         # recomputed on the change side (derive-if-missing/wrong; the
         # union keeps the table's n_tok type under widening). The
-        # ``salted`` flag collapses a hot key to ≤ num_salts rows per
-        # salt stage BEFORE that exchange.
+        # ``salted`` flag collapses a hot key to ≤ 16 rows (one per salt,
+        # ``lww_dedup_salted``'s default) BEFORE that exchange.
         changes = flagged.filter(applies).drop("_q", "_bucket")
         if self.salted:
-            changes = lww_dedup_salted(
-                changes, key=key, num_salts=self.num_salts
-            )
+            changes = lww_dedup_salted(changes, key=key)
         base = self.table.read(self.spark, buckets=touched, snapshot=snap)
         merged = merge_upsert_lww(
             base, recompute_n_tok(changes), key=key,
@@ -617,7 +612,7 @@ class CdcEngine:
         # 9. write + DQ gate (its counts ride the write job).
         # write_data_files' repartition(P, key) is elided: the merge
         # already partitioned on the key at P.
-        new_files, rows_out = self._write_epoch(merged, snap, epoch, touched)
+        new_files = self._write_epoch(merged, snap, epoch, touched)
 
         # 10. atomic publish + lineage + metrics (guarded on the
         # snapshot the merge read — a loser raises ConcurrentCommitError
@@ -632,7 +627,7 @@ class CdcEngine:
             planned=snap,
         )
         return self._committed(epoch, stats, rows_in, conflicts, t0,
-                               rows_out)
+                               sum(f["rows"] for f in new_files))
 
     def _apply_mor(self, flagged, snap, epoch: int,
                    t0: float) -> EpochResult:
@@ -660,19 +655,17 @@ class CdcEngine:
         # Trade, priced in BASELINE.md: the single exchange moves raw
         # rows, so a pathological hot key lands on one reducer before
         # collapsing — the ``salted`` flag first collapses a hot
-        # key to ≤ num_salts rows (two-stage plan) for that regime.
+        # key to ≤ 16 rows (two-stage plan) for that regime.
         # 7. n_tok recomputed (derive-if-missing/wrong).
         if self.salted:
-            changes = lww_dedup_salted(
-                changes, key=key, num_salts=self.num_salts
-            )
+            changes = lww_dedup_salted(changes, key=key)
         deduped = recompute_n_tok(
             lww_dedup(changes.repartition(write_partitions(self.spark, B),
                                           F.col(key)), key=key)
         )
         # 8. write the delta files + DQ gate. Bucket-pure, so each file's
         # footer gives its bucket's applied rows and max lsn.
-        new_files, _ = self._write_epoch(deduped, snap, epoch)
+        new_files = self._write_epoch(deduped, snap, epoch)
         m = obs.get
         rows_in, conflicts = int(m["rows_in"] or 0), int(m["rows_q"] or 0)
         # the audit write re-reads the WAL, not the observed plan

@@ -630,40 +630,6 @@ def commit_lock(root: str, wait_sec: float | None = None):
             pass
 
 
-@contextmanager
-def bucket_aligned_write(spark):
-    """Keep ``df.observe`` metrics alive through an empty bucket-pure write.
-
-    AQE's ``AQEPropagateEmptyRelation`` is excluded for these writes:
-    when a shuffle stage comes out empty it replaces that stage's parent
-    subtree, and any ``df.observe`` (CollectMetrics) under it, with an
-    empty relation, so ``Observation.get`` finds no metrics row and
-    fails. A merge-on-read epoch whose rows are all quarantined or
-    below the watermark writes an empty shuffle and still reads its
-    counts from an observe. The rule is appended to any existing
-    exclusions and the previous value is restored on exit.
-
-    AQE partition coalescing stays on: the writer splits every task's
-    rows into one file per bucket (``partitionBy``), so file purity no
-    longer rests on a shuffle partition index equalling the bucket. A
-    coalesced partition is a union of whole hash partitions, and every
-    file it writes still holds one bucket.
-    """
-    excluded = "spark.sql.adaptive.optimizer.excludedRules"
-    old = spark.conf.get(excluded, None)
-    rules = [r for r in (old or "").split(",") if r]
-    spark.conf.set(excluded, ",".join(rules + [
-        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
-    ]))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(excluded)
-        else:
-            spark.conf.set(excluded, old)
-
-
 def bucket_expr(key_col: str, num_buckets: int):
     """Deterministic bucket id for a key: pmod(murmur3(key), B).
 
@@ -1374,7 +1340,9 @@ class LakeTable:
         files go live only when a commit references them, and a dead
         attempt is an orphan for ``remove_orphans``. Buckets that end up
         empty (all rows deleted) produce no file and drop out; when no
-        file survives, the attempt dir is removed.
+        file survives, the attempt dir is removed. The write sets no
+        session conf, so writers on several threads of one session share
+        no state but the commit log (``_publish``).
 
         ``sort_by_key`` + ``max_records_per_file`` produce SORTED,
         SIZE-SPLIT buckets (Iceberg sort-order compaction): several files
@@ -1403,8 +1371,7 @@ class LakeTable:
             writer = writer.option(
                 "maxRecordsPerFile", int(max_records_per_file)
             )
-        with bucket_aligned_write(df.sparkSession):
-            writer.parquet(out_dir)
+        writer.parquet(out_dir)
         _flatten_bucket_dirs(out_dir)
         wanted = set(buckets_touched) if buckets_touched is not None else None
         # a bucket with no rows has no _bucket dir, hence no file

@@ -128,6 +128,46 @@ def test_epoch_with_nothing_to_apply_is_empty(spark, tmpdir_clean, mode):
     assert set(os.listdir(data)) == dirs
 
 
+def test_empty_shuffle_still_delivers_observed_counts(spark, tmpdir_clean):
+    """Epoch 0 re-applied under a new epoch id with one NULL-op row
+    added, audit lane on, in four engine shapes: the watermark drops
+    every valid row, so each epoch ends ``empty`` and, in merge-on-read,
+    writes an empty shuffle under the epoch's ``df.observe`` counts.
+
+    Why this test exists: when an exchange that is NOT elided sits above
+    an observed aggregate whose input shuffle came out empty, AQE
+    (``AQEPropagateEmptyRelation``) replaces that subtree, metrics
+    observer included, with an empty relation, and ``Observation.get``
+    raises. The engine's plans shuffle once at the writer's width, so
+    the writer's repartition is elided and the metrics arrive. An engine
+    shape that adds such an exchange fails here, before publish, rather
+    than in production."""
+    table, wal, base = _setup(spark, tmpdir_clean)
+    eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "ckpt"))
+    eng.apply_epoch(0)
+    env0 = wal.read_epoch(spark, 0)
+    batch = env0.unionByName(env0.orderBy("lsn").limit(1).withColumn(
+        "op", F.lit(None).cast("string")))
+    n = batch.count()
+    data = os.path.join(table.root, "data")
+    v, dirs = table.current().version, set(os.listdir(data))
+    shapes = [("cow", {}), ("mor", {}), ("mor", {"salted": True}),
+              ("mor", {"delta_blooms": True})]
+    for i, (mode, opts) in enumerate(shapes):
+        ckpt = os.path.join(tmpdir_clean, f"ckpt{i}")
+        epoch = EPOCHS + 10 + i
+        res = CdcEngine(spark, table, wal, ckpt, merge_mode=mode,
+                        **opts).apply_changes_df(batch, epoch=epoch)
+        audit = spark.read.parquet(
+            os.path.join(ckpt, "quarantine", f"epoch-{epoch:05d}")).count()
+        shape = (mode, opts)
+        assert (res.status, res.rows_in, res.rows_applied) == (
+            "empty", n, 0), shape
+        assert res.conflicts == audit >= 1, (shape, res.conflicts, audit)
+        assert table.current().version == v, shape
+        assert set(os.listdir(data)) == dirs, shape
+
+
 def test_replay_idempotent(spark, tmpdir_clean):
     table, wal, base = _setup(spark, tmpdir_clean)
     CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "c1")).run()
@@ -178,7 +218,7 @@ def test_skewed_hot_keys(spark, tmpdir_clean):
     )
     # both physical strategies must produce the oracle state under skew
     eng = CdcEngine(spark, table, wal, os.path.join(tmpdir_clean, "ckpt"),
-                    salted=True, num_salts=8)
+                    salted=True)
     eng.run()
     payload = ["tokens", "n_tok", "source"]
     expected = _oracle_state(base, wal, spark, payload)
@@ -187,7 +227,7 @@ def test_skewed_hot_keys(spark, tmpdir_clean):
     root = os.path.join(tmpdir_clean, "mor")
     table2, wal2, _ = _setup(spark, root, num_hot_keys=1, hot_key_frac=0.5)
     res = CdcEngine(spark, table2, wal2, os.path.join(root, "ckpt"),
-                    merge_mode="mor", salted=True, num_salts=8).run()
+                    merge_mode="mor", salted=True).run()
     assert all(r.status == "committed" for r in res)
     assert_states_equal(expected, _collect_state(table2.read(spark), payload))
 

@@ -578,14 +578,10 @@ def test_coalesced_upstream_grouping_still_writes_pure_files(
     )
     from e_commerce_batch_etl_pipeline_spark.tables.format import (
         LakeTable,
-        bucket_aligned_write,
         write_partitions,
     )
 
     coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    assert spark.conf.get(coalesce) == "true"
-    with bucket_aligned_write(spark):
-        assert spark.conf.get(coalesce) == "true"
     assert spark.conf.get(coalesce) == "true"
     P = write_partitions(spark, 16)
     assert P == 4 == int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -608,3 +604,71 @@ def test_coalesced_upstream_grouping_still_writes_pure_files(
     assert len({os.path.basename(e["path"]).split("-")[2]
                 for e in entries}) == 1, entries
     assert_flat_pure_files(spark, table.root, entries, 16)
+
+
+def test_concurrent_writes_leave_session_conf_alone(
+        spark, tmpdir_clean, monkeypatch):
+    """Two threads of one session write bucket-pure files into their own
+    tables, interleaved in a fixed order: A is inside its write before B
+    starts, B enters while A is still inside, and B's write returns only
+    after A's ``write_data_files`` has. A writer that saves, sets and
+    restores a session conf around its write would have B restore the
+    value A set, and leave it set for every later query. The session
+    conf must read as before, and every file must be flat and pure."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from e_commerce_batch_etl_pipeline_spark.streaming.bootstrap import (
+        DOCS_SCHEMA,
+    )
+    from e_commerce_batch_etl_pipeline_spark.tables.format import LakeTable
+
+    excluded = "spark.sql.adaptive.optimizer.excludedRules"
+    before = spark.conf.get(excluded, None)
+    a_inside, b_inside, a_done = (threading.Event() for _ in range(3))
+    parquet = DataFrameWriter.parquet
+
+    def ordered_parquet(self, path, *args, **kwargs):
+        who = threading.current_thread().name
+        if who == "A":
+            a_inside.set()
+            assert b_inside.wait(120), "B never entered its write"
+        elif who == "B":
+            b_inside.set()
+            assert a_done.wait(120), "A's write never returned"
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", ordered_parquet)
+    tables, entries, errors = {}, {}, {}
+    for name in "AB":
+        tables[name] = LakeTable.create(
+            os.path.join(tmpdir_clean, name), DOCS_SCHEMA,
+            key_column="doc_id", num_buckets=16)
+    docs = {name: generate_base_docs(spark, 400, seed=seed, max_len=8)
+            for name, seed in (("A", 1), ("B", 2))}
+
+    def write(name):
+        try:
+            if name == "B":
+                assert a_inside.wait(120), "A never entered its write"
+            entries[name] = tables[name].write_data_files(docs[name])
+        except Exception as exc:  # re-raised on the main thread
+            errors[name] = exc
+        finally:
+            # unblock the other thread even when this one failed
+            (a_done if name == "A" else b_inside).set()
+
+    threads = [threading.Thread(target=write, args=(n,), name=n)
+               for n in "AB"]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not [t for t in threads if t.is_alive()]
+    for name, exc in errors.items():
+        raise AssertionError(f"writer {name} failed") from exc
+    assert spark.conf.get(excluded, None) == before
+    for name in "AB":
+        assert sum(e["rows"] for e in entries[name]) == 400
+        assert_flat_pure_files(spark, tables[name].root, entries[name], 16)
